@@ -1,0 +1,3 @@
+"""End-to-end and per-layer benchmark of raster_processor_spark; run it with
+``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root (see perfbench/README.md)."""
