@@ -19,11 +19,6 @@ def lon_360to180_col(lon: Column) -> Column:
     return F.pmod(lon + 180.0, F.lit(360.0)) - 180.0
 
 
-def lon_360to180_sql(lon_sql: str) -> str:
-    # DuckDB % keeps the dividend sign; inputs here are >= -180 so +360 first
-    return f"(((({lon_sql}) + 180.0 + 360.0) % 360.0) - 180.0)"
-
-
 def wgs84_px_area_np(lat: np.ndarray, dlat_deg: float, dlon_deg: float) -> np.ndarray:
     """Geodetic area (m^2) of a dlat x dlon cell centered at lat — the
     reference's per-pixel geodetic area for water-area aggregation
@@ -129,17 +124,6 @@ def llh2xyz_sql(lat_sql: str, lon_sql: str, h_sql: str):
     return x, y, z
 
 
-def ellipsoid_normal_cols(lat_deg: Column, lon_deg: Column):
-    """Unit geodetic surface normal at (lat, lon)."""
-    lat = F.radians(lat_deg)
-    lon = F.radians(lon_deg)
-    return (
-        F.cos(lat) * F.cos(lon),
-        F.cos(lat) * F.sin(lon),
-        F.sin(lat),
-    )
-
-
 def ellipsoid_normal_sql(lat_sql: str, lon_sql: str):
     lat, lon = f"radians({lat_sql})", f"radians({lon_sql})"
     return (
@@ -147,49 +131,6 @@ def ellipsoid_normal_sql(lat_sql: str, lon_sql: str):
         f"(cos({lat}) * sin({lon}))",
         f"(sin({lat}))",
     )
-
-
-def xyz2llh_cols(x: Column, y: Column, z: Column):
-    """ECEF → geodetic, Vermeille 2002 closed form (same published algorithm
-    as raster_crs.py:239-279), as Column exprs."""
-    a2 = WGS84_A * WGS84_A
-    e2, e4 = WGS84_E2, WGS84_E2 * WGS84_E2
-    p = (x * x + y * y) / a2
-    q = (1.0 - e2) * z * z / a2
-    r = (p + q - e4) / 6.0
-    s = e4 * p * q / (4.0 * r * r * r)
-    t = F.cbrt(1.0 + s + F.sqrt(s * (2.0 + s)))
-    u = r * (1.0 + t + 1.0 / t)
-    v = F.sqrt(u * u + e4 * q)
-    w = e2 * (u + v - q) / (2.0 * v)
-    k = F.sqrt(u + v + w * w) - w
-    d = k * F.sqrt(x * x + y * y) / (k + e2)
-    hyp = F.sqrt(d * d + z * z)
-    lat = 2.0 * F.atan2(z, d + hyp)
-    h = (k + e2 - 1.0) / k * hyp
-    lon = F.atan2(y, x)
-    return F.degrees(lat), F.degrees(lon), h
-
-
-def xyz2llh_sql(x_sql: str, y_sql: str, z_sql: str):
-    a2 = WGS84_A * WGS84_A
-    e2, e4 = WGS84_E2, WGS84_E2 * WGS84_E2
-    x, y, z = f"({x_sql})", f"({y_sql})", f"({z_sql})"
-    p = f"(({x} * {x} + {y} * {y}) / {a2!r})"
-    q = f"((1.0 - {e2!r}) * {z} * {z} / {a2!r})"
-    r = f"(({p} + {q} - {e4!r}) / 6.0)"
-    s = f"({e4!r} * {p} * {q} / (4.0 * {r} * {r} * {r}))"
-    t = f"cbrt(1.0 + {s} + sqrt({s} * (2.0 + {s})))"
-    u = f"({r} * (1.0 + {t} + 1.0 / {t}))"
-    v = f"sqrt({u} * {u} + {e4!r} * {q})"
-    w = f"({e2!r} * ({u} + {v} - {q}) / (2.0 * {v}))"
-    k = f"(sqrt({u} + {v} + {w} * {w}) - {w})"
-    d = f"({k} * sqrt({x} * {x} + {y} * {y}) / ({k} + {e2!r}))"
-    hyp = f"sqrt({d} * {d} + {z} * {z})"
-    lat = f"degrees(2.0 * atan2({z}, {d} + {hyp}))"
-    h = f"(({k} + {e2!r} - 1.0) / {k} * {hyp})"
-    lon = f"degrees(atan2({y}, {x}))"
-    return lat, lon, h
 
 
 def xyz2llh_append(df, x: Column, y: Column, z: Column,

@@ -15,50 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# ------------------------------------------------------------------ A6 -------
-
-def inv_var_weighted_mean(x: Column, var: Column, alias: str) -> Column:
-    """Inverse-variance weighted mean Σ(x/σ²)/Σ(1/σ²)
-    (raster_agg.py:69-78 height_weighted_mean_masked)."""
-    w = F.lit(1.0) / var
-    return (F.sum(x * w) / F.sum(w)).alias(alias)
-
-
-def inv_var_weighted_mean_sql(x: str, var: str, alias: str) -> str:
-    return (
-        f"SUM(({x}) * (1.0 / ({var}))) / SUM(1.0 / ({var})) AS {alias}"
-    )
-
-
-# ------------------------------------------------------------------ A9 -------
-
-def composite_area(
-    cls: Column, pixel_area: Column, water_frac: Column,
-    interior: list[int], edge: list[int], alias: str,
-) -> Column:
-    """Composite water area: interior pixels count fully, edge pixels by
-    water fraction (raster_agg.py:181-222 aggregate_water_area,
-    method='composite')."""
-    return F.sum(
-        F.when(cls.isin(interior), pixel_area)
-        .when(cls.isin(edge), pixel_area * water_frac)
-        .otherwise(F.lit(0.0))
-    ).alias(alias)
-
-
-def composite_area_sql(
-    cls: str, pixel_area: str, water_frac: str,
-    interior: list[int], edge: list[int], alias: str,
-) -> str:
-    i = ", ".join(map(str, interior))
-    e = ", ".join(map(str, edge))
-    return (
-        f"SUM(CASE WHEN ({cls}) IN ({i}) THEN ({pixel_area}) "
-        f"WHEN ({cls}) IN ({e}) THEN ({pixel_area}) * ({water_frac}) "
-        f"ELSE 0.0 END) AS {alias}"
-    )
-
-
 def composite_area_variance(
     cls: Column, pixel_area: Column, water_frac_uncert: Column,
     darea_dheight: Column, height_var: Column, pfd: Column, pmd: Column,

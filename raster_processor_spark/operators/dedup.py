@@ -107,21 +107,6 @@ def word_id_expr(word):
     )
 
 
-def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, i, word) with 0-based position (ordering is what matters).
-
-    Repartitions by doc_id up front: the documents table is typically a
-    single parquet file at test scale, and everything downstream (shingle
-    windows, signature groupBys) partitions by doc_id anyway — one shuffle
-    here feeds them all."""
-    d = (
-        _read_parquet(spark, f"{sf_dir}/documents.parquet")
-        .select("doc_id", F.split("text", " ").alias("ws"))
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    return d.select("doc_id", F.posexplode("ws").alias("i", "word"))
-
-
 def wid_array_col(text):
     """Array of per-token word ids for one document — the whole tokenize +
     hash front-end as ONE narrow projection (no explode, no shuffle).
@@ -331,17 +316,6 @@ def _minhash_wide(sh: DataFrame) -> DataFrame:
         for p, a, b in MINHASH_PERMS
     ]
     return sh.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """(doc_id, pid, mh): the per-permutation signature view (unpivoted from
-    the fused wide aggregate). Same values as the per-permutation form."""
-    wide = _minhash_wide(sh)
-    stack_args = ", ".join(f"{p}, mh{p}" for p, _, _ in MINHASH_PERMS)
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({len(MINHASH_PERMS)}, {stack_args}) AS (pid, mh)"),
-    ).select("doc_id", "pid", "mh")
 
 
 def minhash_band_buckets(sh: DataFrame, rows_per_band: int = 1) -> DataFrame:

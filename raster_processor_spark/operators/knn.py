@@ -3,149 +3,67 @@ sorted H3 k-ring expansion"; reference analogue: nearest-cell gather,
 geoloc_raster.py:72-76, and nearest-grid interpolation,
 make_raster_region_maps.py:112-117).
 
-Algorithm — ONE declarative plan, zero driver coordination:
+One driver (_knn) runs the algorithm on either of two cell grids; a _Grid
+supplies only what differs between them (binning, probe cells, disk
+offsets, resolve bound, density-chosen resolution):
 
-  1. assign every point its quadcell at a density-chosen resolution
-     (quadcells are square in degrees, so a Chebyshev ring R bounds
-     euclidean distance: any point outside disk(R) is > R*s away);
+  1. assign every point its cell at a density-chosen resolution — a
+     square quadcell (QUAD) or a pointy-top axial hexcell (HEX) — and give
+     the corpus side one composite ``cell`` id;
   2. for ring radius R in an escalating schedule: explode each unresolved
      query's disk(R) offsets, equi-join candidates on cell id, then ONE
-     window pass computes rank, candidate count, and the kth distance —
-     a query is resolved iff it has >= k candidates AND its kth distance is
-     strictly inside R*s (the correctness guarantee);
+     window pass computes rank, candidate count, and the kth distance — a
+     query is resolved iff it has >= k candidates AND its kth distance is
+     strictly inside the grid's bound for R (any point outside disk(R) is
+     provably farther than that bound — the correctness guarantee);
   3. the unresolved tail (sparse regions) falls back to a broadcast
      brute-force pass — bounded, tiny at scale.
 
-The escalation runs phase by phase: each phase's accepted set is
-materialized once via an eager localCheckpoint (see _phase_result) and the
-next phase's input is the previous queries anti-joined against its resolved
-keys; the phases union into the output plan over the materialized blocks.
-When the first ring resolves everything the later phases' inputs are empty
-and their jobs are no-ops. There are no per-round count()/isEmpty() driver
-round-trips beyond the phase materializations themselves (each is one job;
-the round-5 fully-lazy form instead re-ran each phase's rank window once
-per consumer).
+Each phase's accepted set has two consumers (the output union and the next
+phase's anti-join), so it is materialized once at plan-build time with
+``localCheckpoint(eager=True)``: one job per phase, per-query-bounded
+blocks (k·|queries| rows of 4 scalars) that are not CacheManager entries
+and are released by ContextCleaner once the caller drops the result. When
+the exact point count n is known (``n_hint`` or an eager count), the
+accepted row count is checked against n·k after each phase: at n·k every
+query is resolved and the remaining phases and the brute tail are skipped;
+above n·k the hint was wrong and the call raises.
+
+Hot cells (occupancy > HOT_CELL_CAP) make ring candidates quadratic in
+their membership; above HOT_SPLIT_MIN_ROWS points, queries in hot cells
+re-run the same exact schedule at res + HOT_RES_DELTA. Both branches are
+independently exact, so their union is too; their build-time phase jobs
+run on two driver threads so one branch's scheduling tail overlaps the
+other's tasks.
 
 Distance: planar squared degrees (dx*dx + dy*dy) — a single-rounding double
 expression, bit-identical in Spark / DuckDB / numpy, deterministic ties by
-neighbor key. At 10^12 scale the candidate join is an equi-join on cell ids
-co-located by the tiling partitioning; disk(R) explode multiplies the QUERY
-side only, and each ring round is one shuffle (rank/count/kth fuse into a
-single Exchange). The brute tail is a BroadcastNestedLoopJoin on the query
-side only (never a CartesianProduct), safe because ring escalation bounds it
-to sparse-region stragglers.
+neighbor key. The candidate join is an equi-join on cell ids (bucket-aligned
+when the corpus is a committed bucketed table, see knn_join); disk(R)
+explode multiplies the QUERY side only, and each ring round is one shuffle
+(rank/count/kth fuse into a single Exchange). The brute tail is a
+BroadcastNestedLoopJoin on the query side only (never a CartesianProduct).
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raster_processor_spark import cellindex as ci
+from raster_processor_spark.sources.tables import const_df
 
-
-# Constant offset tables (pure literals — no files, no data): creating the
-# local relation costs ~30 ms of py4j/conversion per call, and each kNN
-# invocation needs 2-4 of them. Memoized per (application, grid, ring);
-# keyed by applicationId so a restarted in-process session (tests) never
-# sees a relation bound to a stopped context.
-_OFFSETS_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _offsets_df(spark, grid: str, rows: list, schema: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, grid)
-    df = _OFFSETS_MEMO.get(key)
-    if df is None:
-        df = spark.createDataFrame(rows, schema)
-        _OFFSETS_MEMO[key] = df
-    return df
-
-
-def _disk_offsets_df(spark, ring: int) -> DataFrame:
-    offs = ci.quad_disk_offsets(ring)
-    return _offsets_df(
-        spark, f"quad{ring}",
-        [(int(dy), int(dx)) for dy, dx in offs], "dy BIGINT, dx BIGINT",
-    )
-
-
-_ROW_COUNT_MEMO: dict[str, tuple[object, int]] = {}
-
-
-def parquet_row_count(path: str) -> int:
-    """Exact row count from parquet FOOTERS only — no data scan, no Spark
-    job (pyarrow sums row-group counts from file metadata). This is the
-    same lineage a snapshot manifest records (sources/snapshots.py), used
-    to feed density heuristics without doubling input I/O. Memoized
-    against the path's on-disk state (same treatment as the schema memo in
-    sources/tables.py): the count of an unchanged file set is pure
-    metadata, and several queries re-derive it multiple times per
-    invocation."""
-    from raster_processor_spark.sources.tables import _path_state
-
-    state = _path_state(path)
-    hit = _ROW_COUNT_MEMO.get(path)
-    if hit is not None and hit[0] == state:
-        return hit[1]
-    import pyarrow.dataset as ds
-
-    n = ds.dataset(path, format="parquet").count_rows()
-    _ROW_COUNT_MEMO[path] = (state, n)
-    return n
-
-
-def density_res(n: int) -> int:
-    """Quadcell resolution for ~0.6 points per cell (see knn_join)."""
-    return max(2, min(12, int(math.log2(max(n, 16) / 0.6) / 2)))
-
-
-def _quad_bin_sqls(res: int) -> tuple[str, str, int, int]:
-    """(ybin sql, xbin sql, ny, nx) — clamped lat rows, wrapped lon cols,
-    as SQL strings (same double arithmetic as the round-5 Column builders;
-    string assembly is O(1) py4j calls per stage)."""
-    ny, nx = 1 << res, 1 << (res + 1)
-    yb = (
-        f"LEAST(GREATEST(CAST(FLOOR((lat + 90.0D) / 180.0D * {ny})"
-        f" AS BIGINT), 0L), {ny - 1}L)"
-    )
-    xb = (
-        f"LEAST(GREATEST(CAST(FLOOR((lon + 180.0D) / 360.0D * {nx})"
-        f" AS BIGINT), 0L), {nx - 1}L)"
-    )
-    return yb, xb, ny, nx
-
-
-def _quad_bin_cols(res: int):
-    """(ybin expr, xbin expr, ny, nx) — Column view of _quad_bin_sqls."""
-    yb, xb, ny, nx = _quad_bin_sqls(res)
-    return F.expr(yb), F.expr(xb), ny, nx
-
-
-def indexed_corpus(points: DataFrame, res: int) -> DataFrame:
-    """(nkey, nlat, nlon, cell) — the kNN corpus side with its composite
-    quadcell id (cell = ybin*nx + xbin, bijective with the (ybin, xbin)
-    pair). This is the table a write-time bucketed layout commits ONCE per
-    (corpus, res): every later kNN candidate join scans it bucket-aligned
-    with zero Exchange on the corpus side (see knn_join corpus_table)."""
-    yb, xb, _ny, nx = _quad_bin_sqls(res)
-    return points.selectExpr(
-        "key AS nkey", "lat AS nlat", "lon AS nlon",
-        f"({yb}) * {nx} + ({xb}) AS cell",
-    )
-
-
-# Hot-cell split (two-level quadtree): a cell whose occupancy exceeds
+# Hot-cell split (two-level grid): a cell whose occupancy exceeds
 # HOT_CELL_CAP makes ring candidates QUADRATIC in its membership (measured:
 # the fixture's hot box at sf1 put ~625 points/cell at the density-chosen
-# res → 26M ring-3 candidates for 50k queries, 500+ per query). Queries in
-# hot cells re-run the SAME exact ring algorithm at a finer resolution
-# (res + HOT_RES_DELTA → 64x more cells over the hot region); each branch
-# is independently exact (ring escalation + brute tail), so the union is
-# too. The occupancy table is one map-side-combined agg over the corpus
-# and the hot-cell set is a broadcast — at 10^12 points this is the
-# density-adaptive indexing a uniform grid cannot avoid.
+# res → 26M ring-3 candidates for 50k queries, 500+ per query). The
+# occupancy table is one map-side-combined agg over the corpus and the
+# hot-cell set is a broadcast.
 HOT_CELL_CAP = 64
 HOT_RES_DELTA = 3
 # The split's fixed cost (occupancy scan + a second branch in the plan)
@@ -156,283 +74,67 @@ HOT_RES_DELTA = 3
 HOT_SPLIT_MIN_ROWS = 16384
 
 
-def _run_branches(concurrent: bool, *thunks):
-    """Run the independent hot/sparse branch builders, overlapped when the
-    eager-checkpoint form is in use (each builder executes its phase jobs
-    at build time; two driver threads let the scheduler back-fill one
-    branch's scheduling tail with the other's tasks — guide §2.6 shape).
-    Sequential when lazy (no build-time jobs to overlap)."""
-    if not concurrent:
-        return tuple(t() for t in thunks)
-    from concurrent.futures import ThreadPoolExecutor
+@dataclass(frozen=True)
+class _Grid:
+    """What differs between the two grids; the bins are called b0 and b1
+    and the disk offsets d0 and d1 in the generated SQL."""
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        return tuple(f.result() for f in futures)
+    name: str
+    bins: Callable[[int], tuple[str, str]]  # res -> (b0, b1) SQL over lat/lon
+    cell: Callable[[int, str, str], str]  # (res, b0, b1) -> composite id SQL
+    probe: Callable[[int], tuple[str, str | None]]  # res -> (cell, keep filter)
+    disk_offsets: Callable[[int], object]  # ring -> (d0, d1) rows
+    bound: Callable[[int, float], float]  # (ring, cell size) -> resolve radius
+    density_res: Callable[[int], int]  # point count -> resolution
 
-
-def _phase_result(got: DataFrame, checkpoint: bool) -> DataFrame:
-    """Materialize one ring phase's accepted set (or leave it lazy).
-
-    The accepted set has TWO consumers — the output union and the next
-    phase's anti-join derivation — and with a lazy plan each consumer
-    re-runs the rank window over the candidate join (the Exchange is
-    reused, the window is not; measured 0.2-0.4 s per kNN query at sf0.1).
-    ``localCheckpoint(eager=True)`` runs each phase once at plan-build time
-    (the same build-time-execution contract weighted_percentile_distributed
-    already has) and truncates the downstream plan. The blocks are
-    k·|queries| rows of 4 scalars, are NOT CacheManager entries (the
-    stateless test still holds), and are released by ContextCleaner as soon
-    as the caller drops the returned DataFrame — per-query-bounded, unlike
-    the round-3 persist leak. ``checkpoint=False`` keeps the fully lazy
-    single-plan form (used by plan-shape tests that must SEE the candidate
-    join in the final plan)."""
-    return got.localCheckpoint(eager=True) if checkpoint else got
+    def corpus(self, points: DataFrame, res: int) -> DataFrame:
+        """(nkey, nlat, nlon, cell) — the candidate side of every ring
+        phase; also the table a bucketed layout commits once per res."""
+        b0, b1 = self.bins(res)
+        return points.selectExpr(
+            "key AS nkey", "lat AS nlat", "lon AS nlon",
+            f"{self.cell(res, b0, b1)} AS cell",
+        )
 
 
-def _ring_phases_quad(
-    spark, queries, corpus_join, res: int, rings: tuple[int, ...], k: int,
-    checkpoint: bool = True, n_exact: int | None = None,
-):
-    """Run the escalating ring schedule at one resolution. ``queries`` has
-    (key, lat, lon, ybin, xbin) binned at ``res``; returns (accepted rows
-    (qkey, nkey, dist2, rank) or None, unresolved queries — or None when
-    the schedule PROVABLY resolved every query).
+def density_res(n: int) -> int:
+    """Quadcell resolution for ~0.6 points per cell: with disk(3) = 49 cells
+    that is ~30 candidates per query, an order of magnitude less window
+    work than denser grids (measured 3-5x faster than ~8/cell)."""
+    return max(2, min(12, int(math.log2(max(n, 16) / 0.6) / 2)))
 
-    ``n_exact``: the exact query count, when the caller knows it (parquet
-    footer metadata / an eager count — never an estimate). An accepted
-    query contributes exactly k rows (row_number <= k gated on _cnt >= k),
-    so once the phases' accepted row count reaches n_exact*k every query is
-    resolved and the remaining phases (and the caller's brute tail) are
-    dead plan weight — each one a scheduled no-op job plus py4j/codegen
-    cost. The count() per phase runs over that phase's already-materialized
-    localCheckpoint blocks (~tens of ms), so the check is free relative to
-    one skipped phase (measured: the full sf0.1 quad corpus resolves in
-    ring 3, making ring 12 + tail ~0.5 s of pure overhead per invocation)."""
-    s = 180.0 / (1 << res)
+
+def _quad_bin_sqls(res: int) -> tuple[str, str]:
+    """(ybin, xbin) — clamped lat rows, clamped lon cols."""
     ny, nx = 1 << res, 1 << (res + 1)
-    unresolved = queries
-    accepted: DataFrame | None = None
-    resolved_total = 0
-    for ring in rings:
-        offs = _disk_offsets_df(spark, ring)
-        # SQL-string plan assembly (one py4j call per stage instead of one
-        # per expression node — the dedup_simhash lesson; the parsed plan
-        # is identical) and EARLY projection: only (qkey, nkey, dist2)
-        # enter the rank window's exchange — the round-5 form shuffled
-        # qlat/qlon/nlat/nlon/cell through it as dead weight (guide §2.3).
-        q = unresolved.selectExpr(
-            "key AS qkey", "lat AS qlat", "lon AS qlon", "ybin", "xbin"
-        )
-        # explode the query side by disk offsets (lon wraps, lat clamps)
-        probes = (
-            q.crossJoin(F.broadcast(offs))
-            .selectExpr(
-                "qkey", "qlat", "qlon",
-                "ybin + dy AS nyb", f"pmod(xbin + dx, {nx}) AS nxb",
-            )
-            .where(f"nyb >= 0 AND nyb < {ny}")
-            .selectExpr("qkey", "qlat", "qlon", f"nyb * {nx} + nxb AS cell")
-        )
-        cand = probes.join(corpus_join, ["cell"], "inner").where("qkey != nkey")
-        scored = cand.selectExpr(
-            "qkey", "nkey",
-            "(nlon - qlon) * (nlon - qlon) + (nlat - qlat) * (nlat - qlat)"
-            " AS dist2",
-        )
-        # ONE shuffle: rank + count + kth-distance over the same partitioning
-        limit = (ring * s) * (ring * s)
-        ranked = scored.selectExpr(
-            "qkey", "nkey", "dist2",
-            "row_number() OVER (PARTITION BY qkey"
-            " ORDER BY dist2 ASC, nkey ASC) AS rank",
-            "count(1) OVER (PARTITION BY qkey) AS _cnt",
-        ).selectExpr(
-            "qkey", "nkey", "dist2", "rank", "_cnt",
-            f"max(CASE WHEN rank <= {k} THEN dist2 END)"
-            " OVER (PARTITION BY qkey) AS _kth",
-        )
-        # the accepted set is referenced twice (output union + next phase's
-        # anti-join derivation) — materialize it once per phase, see
-        # _phase_result
-        got = _phase_result(
-            ranked.where(
-                f"_cnt >= {k} AND _kth < {limit!r}D AND rank <= {k}"
-            ).select("qkey", "nkey", "dist2", "rank"),
-            checkpoint,
-        )
-        accepted = got if accepted is None else accepted.unionByName(got)
-        if checkpoint and n_exact is not None:
-            resolved_total += got.count()
-            if resolved_total == n_exact * k:
-                return accepted, None
-        resolved_keys = got.select(F.col("qkey").alias("key")).distinct()
-        unresolved = unresolved.join(resolved_keys, "key", "left_anti")
-    return accepted, unresolved
-
-
-def knn_join(
-    points: DataFrame,
-    k: int,
-    res: int | None = None,
-    rings: tuple[int, ...] = (3, 12),
-    n_hint: int | None = None,
-    corpus_table: str | None = None,
-    corpus_table_fine: str | None = None,
-    hot_cap: int | None = HOT_CELL_CAP,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """points: DataFrame(key, lat, lon) → (key, neighbor_key, dist2, rank).
-
-    ``res`` defaults to a density heuristic (~0.6 points per cell; the
-    default disk(3) = 49-cell first phase then resolves nearly every query
-    in one round, and the ring-12 second phase — empty in the common case —
-    bounds the brute tail at corpus scale). The row count feeding the
-    heuristic comes from ``n_hint`` (parquet_row_count / snapshot manifest
-    — metadata only); only when the caller supplies neither ``res`` nor
-    ``n_hint`` does the function fall back to an eager pts.count(), which
-    costs a full extra scan — avoid at scale. ``n_hint``, when provided,
-    must be the EXACT row count (footer metadata and manifests are exact,
-    never estimates): besides the density heuristic it feeds the
-    provably-resolved short-circuit (see _ring_phases_quad) that elides
-    later ring phases and the brute tail once the materialized phases hold
-    n*k accepted rows — an undercount would silently drop unresolved
-    queries from the result.
-
-    Each ring's accepted set feeds the final union AND the next phase's
-    anti-join; by default each phase is materialized once at build time
-    via an eager localCheckpoint (see _phase_result — 0.2-0.4 s faster per
-    query than the round-5 ReusedExchange form, per-query-bounded blocks,
-    CacheManager stays empty). ``checkpoint=False`` restores the fully
-    lazy single-plan form for plan-shape inspection."""
-    spark = points.sparkSession
-    pts = points.select("key", "lat", "lon")
-    if res is None:
-        # 2^(2res+1) cells total; aim for ~0.6 points per cell — with
-        # disk(3) = 49 cells that is ~30 candidates per query, an order of
-        # magnitude less window work than denser grids (measured 3-5x faster
-        # than ~8/cell), and the ring escalation + brute tail keep the
-        # result exact whatever the density guess
-        n = n_hint if n_hint is not None else pts.count()
-        res = density_res(n)
-    else:
-        n = n_hint
-
-    ybin, xbin, ny, nx = _quad_bin_cols(res)
-    indexed = pts.withColumn("ybin", ybin).withColumn("xbin", xbin)
-    if corpus_table is not None:
-        # write-time bucketed layout (sources/snapshots.bucketed_table on
-        # "cell"): every ring phase's candidate join scans the corpus
-        # bucket-aligned — ZERO Exchange on the corpus side, and the corpus
-        # derivation (georeference + binning) is never recomputed. The
-        # merge hint pins the sort-merge path so the layout is exercised
-        # even at toy scale where a broadcast would otherwise win; at
-        # corpus scale SMJ is the only viable plan anyway.
-        corpus = spark.table(corpus_table)
-        corpus_join = corpus.hint("merge")
-    else:
-        corpus = indexed_corpus(pts, res)
-        corpus_join = corpus
-
-    fres = min(12, res + HOT_RES_DELTA)
-    split = hot_cap is not None and fres > res and (
-        n is None or n >= HOT_SPLIT_MIN_ROWS
+    yb = (
+        f"LEAST(GREATEST(CAST(FLOOR((lat + 90.0D) / 180.0D * {ny})"
+        f" AS BIGINT), 0L), {ny - 1}L)"
     )
-    if split:
-        # two-level quadtree: queries whose BASE cell is hot re-run the
-        # same exact schedule at the finer level against the re-binned
-        # corpus; both branches carry their own ring guarantee, so the
-        # union is exact regardless of where the occupancy split falls
-        occ = corpus.groupBy("cell").agg(F.count(F.lit(1)).alias("_occ"))
-        hot_cells = occ.where(F.col("_occ") > hot_cap).select("cell")
-        q_cell = indexed.withColumn("cell", F.col("ybin") * nx + F.col("xbin"))
-        q_sparse = q_cell.join(F.broadcast(hot_cells), "cell", "left_anti").drop("cell")
-        q_hot = q_cell.join(F.broadcast(hot_cells), "cell", "left_semi").drop(
-            "cell", "ybin", "xbin"
-        )
-        fybin, fxbin, _fny, _fnx = _quad_bin_cols(fres)
-        q_hot_f = q_hot.withColumn("ybin", fybin).withColumn("xbin", fxbin)
-        if corpus_table_fine is not None:
-            corpus_f = spark.table(corpus_table_fine).hint("merge")
-        else:
-            corpus_f = indexed_corpus(pts, fres)
-        # the two branches are independent job chains until the union;
-        # with eager phase materialization they would otherwise serialize
-        # at build time, leaving the cluster idle through each phase's
-        # scheduling tail — overlap them (guide-style concurrent actions;
-        # Spark's FIFO scheduler back-fills the idle slots). The lazy form
-        # has no build-time jobs, so it stays sequential.
-        (acc_s, un_s), (acc_h, un_h) = _run_branches(
-            checkpoint,
-            lambda: _ring_phases_quad(
-                spark, q_sparse, corpus_join, res, rings, k, checkpoint
-            ),
-            lambda: _ring_phases_quad(
-                spark, q_hot_f, corpus_f, fres, rings, k, checkpoint
-            ),
-        )
-        accepted = (
-            acc_s.unionByName(acc_h)
-            if acc_s is not None and acc_h is not None
-            else (acc_s if acc_s is not None else acc_h)
-        )
-        cols = ["key", "lat", "lon"]
-        unresolved = un_s.select(*cols).unionByName(un_h.select(*cols))
-        # branch-level short-circuit (the per-branch query counts are
-        # unknown, so the in-phase check cannot fire inside the branches):
-        # one count over the branches' materialized blocks proves whether
-        # the schedules jointly resolved every query — if so the brute tail
-        # (and its anti-join derivation) is dead weight in the final plan
-        if checkpoint and n is not None and accepted is not None:
-            if accepted.count() == n * k:
-                unresolved = None
-    else:
-        accepted, unresolved = _ring_phases_quad(
-            spark, indexed, corpus_join, res, rings, k, checkpoint,
-            n_exact=n if checkpoint else None,
-        )
+    xb = (
+        f"LEAST(GREATEST(CAST(FLOOR((lon + 180.0D) / 360.0D * {nx})"
+        f" AS BIGINT), 0L), {nx - 1}L)"
+    )
+    return yb, xb
 
-    if unresolved is not None:
-        # brute-force tail for whatever the ring schedule left unresolved:
-        # broadcast the query side (tiny by construction — sparse-region
-        # stragglers only); AQE propagates the empty relation when there
-        # are none
-        q = unresolved.select(
-            F.col("key").alias("qkey"),
-            F.col("lat").alias("qlat"),
-            F.col("lon").alias("qlon"),
-        )
-        cand = F.broadcast(q).crossJoin(
-            corpus.select("nkey", "nlat", "nlon")
-        ).where(F.col("qkey") != F.col("nkey"))
-        dx = F.col("nlon") - F.col("qlon")
-        dy2 = F.col("nlat") - F.col("qlat")
-        w = Window.partitionBy("qkey").orderBy(
-            F.col("dist2").asc(), F.col("nkey").asc()
-        )
-        tail = (
-            cand.withColumn("dist2", dx * dx + dy2 * dy2)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qkey", "nkey", "dist2", "rank")
-        )
-        # rings=() => every query is in the brute tail, nothing was accepted
-        accepted = tail if accepted is None else accepted.unionByName(tail)
 
-    return accepted.select(
-        F.col("qkey").alias("key"),
-        F.col("nkey").alias("neighbor_key"),
-        "dist2",
-        F.col("rank").cast("long").alias("rank"),  # BIGINT like the oracle
+def _quad_cell(res: int, yb: str, xb: str) -> str:
+    return f"({yb}) * {1 << (res + 1)} + ({xb})"
+
+
+def _quad_probe(res: int) -> tuple[str, str]:
+    # longitude wraps, latitude rows outside [0, ny) are dropped
+    ny, nx = 1 << res, 1 << (res + 1)
+    return (
+        _quad_cell(res, "b0 + d0", f"pmod(b1 + d1, {nx})"),
+        f"b0 + d0 >= 0 AND b0 + d0 < {ny}",
     )
 
 
 def _hex_bin_sqls(res: int) -> tuple[str, str]:
-    """(qbin, rbin) cube-rounded axial hex bin expressions as SQL strings —
-    the same double arithmetic the round-5 Column builders produced, but
-    assembled with O(1) py4j calls (the dedup_simhash lesson) and parsed
-    JVM-side. Codegen's subexpression elimination dedupes the textual
-    repetition of qf/rf exactly as it deduped the shared Column nodes.
+    """(qbin, rbin) cube-rounded axial hex bins (cellindex.hex_axial's
+    arithmetic) as codegen'd SQL — no UDF: the binned table feeds every
+    ring phase, so an Arrow stage here would run several times per query.
 
     Nearest-integer via FLOOR(+0.5), not ROUND: round() allocates a
     BigDecimal per value; the tie-break difference (half-away-from-zero vs
@@ -457,104 +159,251 @@ def _hex_bin_sqls(res: int) -> tuple[str, str]:
     return qbin, rbin
 
 
-def _hex_qbin(res: int):
-    """Axial q of the cube-rounded hex cell as a pure codegen column (no
-    UDF: the indexed table feeds every ring phase on both sides, so an
-    Arrow stage here would run several times per query — measured 3x
-    slower). See _hex_bin_sqls for the arithmetic and tie-break notes."""
-    return F.expr(_hex_bin_sqls(res)[0])
-
-
-def _hex_rbin(res: int):
-    return F.expr(_hex_bin_sqls(res)[1])
-
-
-def _hex_corpus(points: DataFrame, res: int) -> DataFrame:
-    return points.select(
-        F.col("key").alias("nkey"),
-        F.col("lat").alias("nlat"),
-        F.col("lon").alias("nlon"),
-        _hex_qbin(res).alias("nqb"),
-        _hex_rbin(res).alias("nrb"),
-    )
-
-
 # composite single-column hex cell id: axial coords are bounded by the
 # lon/lat extents over the smallest cell size (res 12 → |q|,|r| < 2^13),
-# so (q + 2^19) * 2^20 + (r + 2^19) is collision-free and keeps the
-# candidate equi-join on ONE long key (same shape as the quad path)
+# so (q + 2^19) * 2^20 + (r + 2^19) is collision-free
 _HEX_OFF = 1 << 19
 _HEX_MUL = 1 << 20
 
 
-def _ring_phases_hex(
-    spark, queries, corpus, res: int, rings: tuple[int, ...], k: int,
-    checkpoint: bool = True, n_exact: int | None = None,
-):
-    """Hex twin of _ring_phases_quad: same schedule, axial (q, r) keys and
-    the hex separation bound (see knn_hex_join docstring). ``n_exact`` is
-    the same provably-resolved short-circuit as the quad twin: once the
-    materialized phases hold n_exact*k accepted rows, later phases and the
-    caller's brute tail are skipped."""
-    from raster_processor_spark import cellindex as ci_mod
+def _hex_cell(res: int, qb: str, rb: str) -> str:
+    return f"(({qb}) + {_HEX_OFF}) * {_HEX_MUL} + ({rb}) + {_HEX_OFF}"
 
+
+def _hex_density_res(n: int) -> int:
+    # ~0.6 points per hex cell NOMINALLY — then one level finer once the
+    # corpus is large: points cluster in bands, so the occupancy of
+    # OCCUPIED cells runs ~4x the global average, and hex cells are 2.6x
+    # the area of quad cells at equal res (measured at the 10x scale point:
+    # res+1 halves the ring-3 candidate volume while the ring schedule
+    # still resolves >99% of sparse queries in the first phase). Below the
+    # gate the coarser grid's candidate volume is already small and the
+    # finer grid only adds unresolved stragglers.
+    s_target = math.sqrt(64800.0 * 0.6 / (2.598 * max(n, 16)))
+    bump = 1 if n >= HOT_SPLIT_MIN_ROWS else 0
+    return max(2, min(12, round(math.log2(180.0 / s_target)) + bump))
+
+
+# Quadcells are square in degrees, so a Chebyshev ring R bounds euclidean
+# distance: any point outside disk(R) is > R*s away.
+QUAD = _Grid(
+    name="quad",
+    bins=_quad_bin_sqls,
+    cell=_quad_cell,
+    probe=_quad_probe,
+    disk_offsets=ci.quad_disk_offsets,
+    bound=lambda ring, s: ring * s,
+    density_res=density_res,
+)
+
+# Hex centers at graph distance d are >= 1.5*size*d apart (|c|^2 =
+# 3*size^2*(q^2+qr+r^2) and q^2+qr+r^2 >= (3/4)*d^2 — tight at knight-move
+# cells like (2,-1); enumeration test in tests/). Any point outside disk(R)
+# sits in a cell at distance >= R+1 and each point is within one
+# circumradius of its center, so its separation from the query is
+# >= (1.5*(R+1) - 2)*size. No longitude wrap: the hex grid is planar,
+# matching the planar metric of the oracle, so a wrapped near-dateline
+# neighbor is far in the metric and omitting it cannot change the answer.
+HEX = _Grid(
+    name="hex",
+    bins=_hex_bin_sqls,
+    cell=_hex_cell,
+    probe=lambda res: (_hex_cell(res, "b0 + d0", "b1 + d1"), None),
+    disk_offsets=ci.hex_disk_offsets,
+    bound=lambda ring, s: (1.5 * (ring + 1) - 2.0) * s,
+    density_res=_hex_density_res,
+)
+
+
+# shared by the ring phases and the brute tail: same distance, same ties
+_DIST2 = "(nlon - qlon) * (nlon - qlon) + (nlat - qlat) * (nlat - qlat) AS dist2"
+_RANK = (
+    "row_number() OVER (PARTITION BY qkey ORDER BY dist2 ASC, nkey ASC) AS rank"
+)
+
+
+def _union(a: DataFrame | None, b: DataFrame | None) -> DataFrame | None:
+    if a is None:
+        return b
+    return a if b is None else a.unionByName(b)
+
+
+def _all_resolved(rows: int, n: int, k: int) -> bool:
+    """An accepted query contributes exactly k rows, so n·k accepted rows
+    prove every query resolved. More than n·k can only mean the caller's
+    point count was too small."""
+    if rows > n * k:
+        raise ValueError(
+            f"kNN n_hint={n} is below the true point count: the ring phases"
+            f" accepted {rows} rows, more than n_hint*k = {n * k}"
+        )
+    return rows == n * k
+
+
+def _ring_phases(
+    grid: _Grid, queries: DataFrame, corpus: DataFrame, res: int,
+    rings: tuple[int, ...], k: int, n_exact: int | None = None,
+):
+    """Run the escalating ring schedule at one resolution. ``queries`` has
+    (key, lat, lon, b0, b1) binned at ``res``; returns (accepted rows
+    (qkey, nkey, dist2, rank) or None, unresolved queries — or None when
+    ``n_exact`` proves every query resolved, see _all_resolved)."""
+    spark = queries.sparkSession
     s = 180.0 / (1 << res)
-    corpus_k = corpus.selectExpr(
-        "nkey", "nlat", "nlon",
-        f"(nqb + {_HEX_OFF}) * {_HEX_MUL} + nrb + {_HEX_OFF} AS cell",
-    )
+    probe_cell, keep = grid.probe(res)
     unresolved = queries
     accepted: DataFrame | None = None
     resolved_total = 0
     for ring in rings:
-        offs = _offsets_df(
-            spark, f"hex{ring}",
-            [(int(dq), int(dr)) for dq, dr in ci_mod.hex_disk_offsets(ring)],
-            "dq BIGINT, dr BIGINT",
+        offs = const_df(
+            spark, ("knn_offsets", grid.name, ring),
+            lambda: [(int(a), int(b)) for a, b in grid.disk_offsets(ring)],
+            "d0 BIGINT, d1 BIGINT",
         )
-        # SQL-string stages + early projection, mirroring _ring_phases_quad
-        # (same plan, ~1 py4j call per stage, and only (qkey, nkey, dist2)
-        # cross the rank window's exchange)
-        q = unresolved.selectExpr(
-            "key AS qkey", "lat AS qlat", "lon AS qlon", "qbin", "rbin"
+        # SQL-string stages (one py4j call per stage) and early projection:
+        # only (qkey, nkey, dist2) enter the rank window's exchange
+        probes = unresolved.selectExpr(
+            "key AS qkey", "lat AS qlat", "lon AS qlon", "b0", "b1"
+        ).crossJoin(F.broadcast(offs))
+        if keep is not None:
+            probes = probes.where(keep)
+        cand = (
+            probes.selectExpr("qkey", "qlat", "qlon", f"{probe_cell} AS cell")
+            .join(corpus, ["cell"], "inner")
+            .where("qkey != nkey")
         )
-        probes = q.crossJoin(F.broadcast(offs)).selectExpr(
-            "qkey", "qlat", "qlon",
-            f"(qbin + dq + {_HEX_OFF}) * {_HEX_MUL}"
-            f" + rbin + dr + {_HEX_OFF} AS cell",
-        )
-        cand = probes.join(corpus_k, ["cell"], "inner").where("qkey != nkey")
-        scored = cand.selectExpr(
-            "qkey", "nkey",
-            "(nlon - qlon) * (nlon - qlon) + (nlat - qlat) * (nlat - qlat)"
-            " AS dist2",
-        )
-        lim = (1.5 * (ring + 1) - 2.0) * s
-        limit2 = lim * lim
+        scored = cand.selectExpr("qkey", "nkey", _DIST2)
+        # ONE shuffle: rank + count + kth-distance over the same partitioning
+        limit = grid.bound(ring, s)
+        limit = limit * limit
         ranked = scored.selectExpr(
-            "qkey", "nkey", "dist2",
-            "row_number() OVER (PARTITION BY qkey"
-            " ORDER BY dist2 ASC, nkey ASC) AS rank",
+            "qkey", "nkey", "dist2", _RANK,
             "count(1) OVER (PARTITION BY qkey) AS _cnt",
         ).selectExpr(
             "qkey", "nkey", "dist2", "rank", "_cnt",
             f"max(CASE WHEN rank <= {k} THEN dist2 END)"
             " OVER (PARTITION BY qkey) AS _kth",
         )
-        got = _phase_result(
-            ranked.where(
-                f"_cnt >= {k} AND _kth < {limit2!r}D AND rank <= {k}"
-            ).select("qkey", "nkey", "dist2", "rank"),
-            checkpoint,
-        )
-        accepted = got if accepted is None else accepted.unionByName(got)
-        if checkpoint and n_exact is not None:
+        got = ranked.where(
+            f"_cnt >= {k} AND _kth < {limit!r}D AND rank <= {k}"
+        ).select("qkey", "nkey", "dist2", "rank").localCheckpoint(eager=True)
+        accepted = _union(accepted, got)
+        if n_exact is not None:
             resolved_total += got.count()
-            if resolved_total == n_exact * k:
+            if _all_resolved(resolved_total, n_exact, k):
                 return accepted, None
-        resolved_keys = got.select(F.col("qkey").alias("key")).distinct()
+        resolved_keys = got.selectExpr("qkey AS key").distinct()
         unresolved = unresolved.join(resolved_keys, "key", "left_anti")
     return accepted, unresolved
+
+
+def _knn(
+    grid: _Grid, points: DataFrame, k: int, res: int | None,
+    rings: tuple[int, ...], n_hint: int | None,
+    corpus_table: Callable[[int], str] | None, hot_cap: int | None,
+) -> DataFrame:
+    spark = points.sparkSession
+    pts = points.select("key", "lat", "lon")
+    n = n_hint
+    if res is None:
+        if n is None:
+            n = pts.count()
+        res = grid.density_res(n)
+
+    def corpus_at(r: int) -> tuple[DataFrame, DataFrame]:
+        """(corpus, its candidate-join side) at resolution r. A committed
+        bucketed corpus is read bucket-aligned; the merge hint pins the
+        sort-merge path so the layout is used even at toy scale where a
+        broadcast would otherwise win."""
+        if corpus_table is None:
+            corpus = grid.corpus(pts, r)
+            return corpus, corpus
+        corpus = spark.table(corpus_table(r))
+        return corpus, corpus.hint("merge")
+
+    def binned(df: DataFrame, r: int) -> DataFrame:
+        b0, b1 = grid.bins(r)
+        return df.selectExpr("key", "lat", "lon", f"{b0} AS b0", f"{b1} AS b1")
+
+    indexed = binned(pts, res)
+    corpus, corpus_join = corpus_at(res)
+
+    fres = min(12, res + HOT_RES_DELTA)
+    if hot_cap is not None and fres > res and (
+        n is None or n >= HOT_SPLIT_MIN_ROWS
+    ):
+        occ = corpus.groupBy("cell").agg(F.count(F.lit(1)).alias("_occ"))
+        hot_cells = F.broadcast(occ.where(f"_occ > {hot_cap}").select("cell"))
+        q_cell = indexed.withColumn("cell", F.expr(grid.cell(res, "b0", "b1")))
+        q_sparse = q_cell.join(hot_cells, "cell", "left_anti").drop("cell")
+        q_hot = binned(q_cell.join(hot_cells, "cell", "left_semi"), fres)
+        _, corpus_f = corpus_at(fres)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            sparse = pool.submit(
+                _ring_phases, grid, q_sparse, corpus_join, res, rings, k
+            )
+            hot = pool.submit(_ring_phases, grid, q_hot, corpus_f, fres, rings, k)
+            (acc_s, un_s), (acc_h, un_h) = sparse.result(), hot.result()
+        accepted = _union(acc_s, acc_h)
+        unresolved = un_s.unionByName(un_h)
+        # the per-branch query counts are unknown, so the resolved check
+        # runs once over both branches' materialized blocks
+        if n is not None and accepted is not None:
+            if _all_resolved(accepted.count(), n, k):
+                unresolved = None
+    else:
+        accepted, unresolved = _ring_phases(
+            grid, indexed, corpus_join, res, rings, k, n_exact=n
+        )
+
+    if unresolved is not None:
+        # brute-force tail for the stragglers: broadcast the query side
+        # (tiny by construction); AQE propagates the empty relation when
+        # there are none
+        q = unresolved.selectExpr("key AS qkey", "lat AS qlat", "lon AS qlon")
+        tail = (
+            F.broadcast(q).crossJoin(corpus.select("nkey", "nlat", "nlon"))
+            .where("qkey != nkey")
+            .selectExpr("qkey", "nkey", _DIST2)
+            .selectExpr("qkey", "nkey", "dist2", _RANK)
+            .where(f"rank <= {k}")
+        )
+        # rings=() => every query is in the brute tail, nothing was accepted
+        accepted = _union(accepted, tail)
+
+    return accepted.selectExpr(
+        "qkey AS key", "nkey AS neighbor_key", "dist2",
+        "CAST(rank AS BIGINT) AS rank",  # BIGINT like the oracle
+    )
+
+
+def knn_join(
+    points: DataFrame,
+    k: int,
+    res: int | None = None,
+    rings: tuple[int, ...] = (3, 12),
+    n_hint: int | None = None,
+    corpus_table: Callable[[int], str] | None = None,
+    hot_cap: int | None = HOT_CELL_CAP,
+) -> DataFrame:
+    """points: DataFrame(key, lat, lon) → (key, neighbor_key, dist2, rank)
+    over the quadcell grid.
+
+    ``res`` defaults to density_res of the row count. The count comes from
+    ``n_hint`` (parquet_row_count / snapshot manifest — metadata only);
+    only when the caller supplies neither ``res`` nor ``n_hint`` does the
+    function fall back to an eager pts.count(), a full extra scan. A given
+    ``n_hint`` must be the EXACT row count: it also feeds the
+    all-resolved short-circuit, which raises ValueError when the hint is
+    provably too small (see _all_resolved).
+
+    ``corpus_table`` maps a resolution to the name of a committed
+    bucketed table of ``QUAD.corpus(points, res)`` bucketed on ``cell``
+    (sources/snapshots.bucketed_table): every ring phase then scans the
+    corpus bucket-aligned, with no Exchange on the corpus side. It is
+    called for the hot-cell split's finer resolution too, but only when
+    the split engages. ``hot_cap=None`` disables the split."""
+    return _knn(QUAD, points, k, res, rings, n_hint, corpus_table, hot_cap)
 
 
 def knn_hex_join(
@@ -564,127 +413,11 @@ def knn_hex_join(
     rings: tuple[int, ...] = (3, 12),
     n_hint: int | None = None,
     hot_cap: int | None = HOT_CELL_CAP,
-    checkpoint: bool = True,
 ) -> DataFrame:
-    """kNN via H3-style hex k-ring expansion (the north star's literal
-    phrasing) — same contract and EXACT same output as knn_join, different
-    index geometry: points land in pointy-top axial hex cells
-    (cellindex.hex_axial cube rounding, Arrow UDF), each phase explodes the
-    unresolved queries by hex disk(R) offsets and equi-joins candidates on
-    the (q, r) axial key.
-
-    Resolution guarantee: hex centers at graph distance d are >=
-    1.5*size*d apart (|c|^2 = 3*size^2*(q^2+qr+r^2) and q^2+qr+r^2 >=
-    (3/4)*d^2 — tight at knight-move cells like (2,-1); enumeration test
-    in tests/). Any point outside disk(R) sits in a cell at distance >=
-    R+1 and each point is within one circumradius of its center, so its
-    separation from the query is >= (1.5*(R+1) - 2)*size; a query resolves
-    iff it has >= k candidates and its kth distance is strictly inside
-    that bound. Unresolved stragglers fall through rings to the broadcast
-    brute tail — exactness never depends on the density heuristic.
-    ``n_hint`` must be exact when provided (same contract and
-    provably-resolved short-circuit as knn_join). No
-    longitude wrap (the hex grid is planar, matching the planar metric of
-    the oracle; a wrapped near-dateline neighbor is far in the metric, so
-    omitting wrapped candidates cannot change the answer)."""
-    from raster_processor_spark import cellindex as ci_mod  # noqa: F401
-
-    spark = points.sparkSession
-    pts = points.select("key", "lat", "lon")
-    if res is None:
-        n = n_hint if n_hint is not None else pts.count()
-        # ~0.6 points per hex cell NOMINALLY — then one level finer once
-        # the corpus is large: points cluster in bands, so the occupancy
-        # of OCCUPIED cells runs ~4x the global average, and hex cells are
-        # 2.6x the area of quad cells at equal res (measured at the 10x
-        # scale point: res+1 halves the ring-3 candidate volume while the
-        # ring schedule still resolves >99% of sparse queries in the first
-        # phase). Below the gate the coarser grid's candidate volume is
-        # already small and the finer grid only adds unresolved stragglers.
-        s_target = math.sqrt(64800.0 * 0.6 / (2.598 * max(n, 16)))
-        bump = 1 if n >= HOT_SPLIT_MIN_ROWS else 0
-        res = max(2, min(12, round(math.log2(180.0 / s_target)) + bump))
-    else:
-        n = n_hint
-    indexed = pts.withColumn("qbin", _hex_qbin(res)).withColumn(
-        "rbin", _hex_rbin(res)
-    )
-    corpus = _hex_corpus(pts, res)
-
-    fres = min(12, res + HOT_RES_DELTA)
-    if hot_cap is not None and fres > res and (
-        n is None or n >= HOT_SPLIT_MIN_ROWS
-    ):
-        # two-level split mirroring knn_join: hex cells whose occupancy
-        # exceeds the cap re-run the schedule at the finer hex level
-        occ = corpus.groupBy("nqb", "nrb").agg(F.count(F.lit(1)).alias("_occ"))
-        hot_cells = occ.where(F.col("_occ") > hot_cap).select(
-            F.col("nqb").alias("qbin"), F.col("nrb").alias("rbin")
-        )
-        q_sparse = indexed.join(
-            F.broadcast(hot_cells), ["qbin", "rbin"], "left_anti"
-        )
-        q_hot = indexed.join(
-            F.broadcast(hot_cells), ["qbin", "rbin"], "left_semi"
-        ).drop("qbin", "rbin")
-        q_hot_f = q_hot.withColumn("qbin", _hex_qbin(fres)).withColumn(
-            "rbin", _hex_rbin(fres)
-        )
-        corpus_f = _hex_corpus(pts, fres)
-        # overlap the independent branch job chains — see _run_branches
-        (acc_s, un_s), (acc_h, un_h) = _run_branches(
-            checkpoint,
-            lambda: _ring_phases_hex(
-                spark, q_sparse, corpus, res, rings, k, checkpoint
-            ),
-            lambda: _ring_phases_hex(
-                spark, q_hot_f, corpus_f, fres, rings, k, checkpoint
-            ),
-        )
-        accepted = (
-            acc_s.unionByName(acc_h)
-            if acc_s is not None and acc_h is not None
-            else (acc_s if acc_s is not None else acc_h)
-        )
-        cols = ["key", "lat", "lon"]
-        unresolved = un_s.select(*cols).unionByName(un_h.select(*cols))
-        # branch-sum short-circuit, mirroring knn_join (see there)
-        if checkpoint and n is not None and accepted is not None:
-            if accepted.count() == n * k:
-                unresolved = None
-    else:
-        accepted, unresolved = _ring_phases_hex(
-            spark, indexed, corpus, res, rings, k, checkpoint,
-            n_exact=n if checkpoint else None,
-        )
-
-    if unresolved is not None:
-        q = unresolved.select(
-            F.col("key").alias("qkey"),
-            F.col("lat").alias("qlat"),
-            F.col("lon").alias("qlon"),
-        )
-        cand = F.broadcast(q).crossJoin(
-            corpus.select("nkey", "nlat", "nlon")
-        ).where(F.col("qkey") != F.col("nkey"))
-        dx = F.col("nlon") - F.col("qlon")
-        dy2 = F.col("nlat") - F.col("qlat")
-        w = Window.partitionBy("qkey").orderBy(
-            F.col("dist2").asc(), F.col("nkey").asc()
-        )
-        tail = (
-            cand.withColumn("dist2", dx * dx + dy2 * dy2)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qkey", "nkey", "dist2", "rank")
-        )
-        accepted = tail if accepted is None else accepted.unionByName(tail)
-    return accepted.select(
-        F.col("qkey").alias("key"),
-        F.col("nkey").alias("neighbor_key"),
-        "dist2",
-        F.col("rank").cast("long").alias("rank"),
-    )
+    """kNN over H3-style hex k-rings (the north star's literal phrasing) —
+    same contract and EXACT same output as knn_join, different index
+    geometry (see HEX for the resolve bound)."""
+    return _knn(HEX, points, k, res, rings, n_hint, None, hot_cap)
 
 
 def knn_sql(points_sql: str, k: int) -> str:

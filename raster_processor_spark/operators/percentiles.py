@@ -22,81 +22,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def weighted_percentile_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    value: Column,
-    weight: Column,
-    key: Column,
-    q: float,
-    out_name: str,
-) -> DataFrame:
-    """→ DataFrame(group_cols..., out_name) with the reference's weighted
-    percentile of ``value`` under ``weight`` at quantile q (0..1)."""
-    base = df.select(
-        *group_cols, value.alias("_v"), weight.alias("_w"), key.alias("_k")
-    )
-    win = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_v", "_k")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cw = F.sum("_w").over(win)
-    tot = F.sum("_w").over(Window.partitionBy(*group_cols))
-    ranked = base.select(
-        *group_cols,
-        "_v",
-        ((cw - 0.5 * F.col("_w")) / tot).alias("_p"),
-    )
-    below = F.when(F.col("_p") <= q, F.struct(F.col("_p"), F.col("_v")))
-    above = F.when(F.col("_p") > q, F.struct(F.col("_p"), F.col("_v")))
-    g = ranked.groupBy(*group_cols).agg(
-        F.max(below).alias("_lo"), F.min(above).alias("_hi")
-    )
-    p0, v0 = F.col("_lo._p"), F.col("_lo._v")
-    p1, v1 = F.col("_hi._p"), F.col("_hi._v")
-    interp = (
-        F.when(F.col("_lo").isNull(), v1)
-        .when(F.col("_hi").isNull(), v0)
-        .otherwise(v0 + (v1 - v0) * (F.lit(float(q)) - p0) / (p1 - p0))
-    )
-    return g.select(*group_cols, interp.alias(out_name))
-
-
-def weighted_percentile_sql(
-    src_sql: str,
-    group_cols: list[str],
-    value_sql: str,
-    weight_sql: str,
-    key_sql: str,
-    q: float,
-    out_name: str,
-) -> str:
-    """DuckDB twin of weighted_percentile_agg; ``src_sql`` is a SELECT whose
-    columns include the group cols and the value/weight/key expressions."""
-    gc = ", ".join(group_cols)
-    return f"""
-SELECT {gc}, (CASE WHEN p0 IS NULL THEN v1
-              WHEN p1 IS NULL THEN v0
-              ELSE v0 + (v1 - v0) * ({float(q)!r} - p0) / (p1 - p0) END) AS {out_name}
-FROM (
-  SELECT {gc},
-         MAX(CASE WHEN _p <= {float(q)!r} THEN _p END) AS p0,
-         MIN(CASE WHEN _p > {float(q)!r} THEN _p END) AS p1,
-         MAX(CASE WHEN _p <= {float(q)!r} THEN {{'p': _p, 'v': _v}} END).v AS v0,
-         MIN(CASE WHEN _p > {float(q)!r} THEN {{'p': _p, 'v': _v}} END).v AS v1
-  FROM (
-    SELECT {gc}, _v,
-           (SUM(_w) OVER (PARTITION BY {gc} ORDER BY _v, _k
-                          ROWS UNBOUNDED PRECEDING)
-            - 0.5 * _w) / SUM(_w) OVER (PARTITION BY {gc}) AS _p
-    FROM (SELECT {gc}, {value_sql} AS _v, {weight_sql} AS _w, {key_sql} AS _k
-          FROM ({src_sql}))
-  ) GROUP BY {gc}
-)
-"""
-
-
 # The one outstanding persisted range-partitioned input (bounded at a
 # single entry — same session-hygiene pattern as text._RANGED_CACHE).
 # SERIAL-EXECUTION CONTRACT: building a new weighted_percentile_distributed
@@ -122,7 +47,7 @@ def weighted_percentile_distributed(
 ) -> DataFrame:
     """The same weighted percentile WITHOUT a per-group single-task sort.
 
-    weighted_percentile_agg's window (partitionBy(group) orderBy(value))
+    weighted_percentiles_fused's window (partitionBy(group) orderBy(value))
     sorts an ENTIRE group in one task — with a handful of zonal regions
     over a 100 TB fact table that is billions of rows per task. This form
     decomposes the cumsum the way text.distributed_rank_cut decomposes

@@ -21,46 +21,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 from raster_processor_spark.sources.tables import read_parquet as _read_parquet
 
 DIM = 64
-
-
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product in double (bit-matches list_reduce)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
-def cosine_expr(a: str, b: str) -> str:
-    """Fold-exact cosine as an UNROLLED SQL string over the fixed DIM.
-
-    Same FP sequence as the zip_with+aggregate fold (0.0 + p1 + p2 + ...,
-    left-associated), but as a flat expression tree that stays inside
-    whole-stage codegen — Catalyst higher-order functions evaluate their
-    lambda per element OUTSIDE codegen, which made the HOF fold the
-    dominant cost of candidate scoring at scale (measured: the IVF
-    candidate scorer spent most of its time in the interpreted fold)."""
-
-    def dot(x: str, y: str) -> str:
-        terms = "".join(
-            f" + CAST(element_at({x}, {i}) AS DOUBLE)"
-            f" * CAST(element_at({y}, {i}) AS DOUBLE)"
-            for i in range(1, DIM + 1)
-        )
-        return f"(CAST(0.0 AS DOUBLE){terms})"
-
-    return f"{dot(a, b)} / (SQRT({dot(a, a)}) * SQRT({dot(b, b)}))"
 
 
 def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -857,7 +823,7 @@ def ivf_index(
     still matches)."""
     import os
 
-    from raster_processor_spark.operators.knn import parquet_row_count
+    from raster_processor_spark.sources.tables import parquet_row_count
     from raster_processor_spark.sources.snapshots import SnapshotStore
 
     corpus_path = f"{sf_dir}/embeddings.parquet"
@@ -914,7 +880,7 @@ def ivf_postings(
     identically to a freshly assigned corpus."""
     import os
 
-    from raster_processor_spark.operators.knn import parquet_row_count
+    from raster_processor_spark.sources.tables import parquet_row_count
     from raster_processor_spark.sources.snapshots import SnapshotStore
 
     cmat, cids, n_centroids, _ = ivf_index(spark, sf_dir, iters)
@@ -958,7 +924,7 @@ def ann_ivf_topk(
     structureless corpus. Deterministic end-to-end — the SQL twin replays
     seeding, Lloyd iterations, spill, probes, and scoring bit-exactly.
     Queries stay a distributed DataFrame throughout."""
-    from raster_processor_spark.operators.knn import parquet_row_count
+    from raster_processor_spark.sources.tables import parquet_row_count
 
     e = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     cmat, cids, n_centroids, nprobe = ivf_index(spark, sf_dir)

@@ -15,7 +15,6 @@ digits → exactly-representable doubles after the /1e4.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
 
 # unit star, x10 (integer): concave at the diagonals
 _STAR = [
@@ -67,13 +66,6 @@ def polygons_np(n_polys: int) -> np.ndarray:
     rows = polygon_rows(n_polys)
     arr = np.asarray([(vx, vy) for (_, _, vx, vy) in rows], dtype=np.float64)
     return arr.reshape(n_polys, len(_STAR), 2)
-
-
-def polygons_df(spark: SparkSession, n_polys: int) -> DataFrame:
-    """Long-form polygon edge table: one row per vertex."""
-    return spark.createDataFrame(
-        polygon_rows(n_polys), "poly_id BIGINT, vertex_idx INT, vx DOUBLE, vy DOUBLE"
-    )
 
 
 def polygons_values_sql(n_polys: int) -> str:

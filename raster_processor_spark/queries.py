@@ -35,6 +35,7 @@ from raster_processor_spark.operators import burn as brn
 from raster_processor_spark.operators import knn as knn_op
 from raster_processor_spark.operators import spatial_join as sj
 from raster_processor_spark.operators import windows as win
+from raster_processor_spark.sources.tables import parquet_row_count
 
 N_POLYS = 24
 KNN_K = 5
@@ -405,7 +406,7 @@ def knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = doc_points(spark, sf_dir).select("key", "lat", "lon")
     # density hint from parquet footers (manifest-style metadata): the
     # points table is scanned exactly once — by the real plan
-    n = knn_op.parquet_row_count(f"{sf_dir}/documents.parquet")
+    n = parquet_row_count(f"{sf_dir}/documents.parquet")
     return knn_op.knn_join(pts, KNN_K, n_hint=n)
 
 
@@ -415,7 +416,7 @@ def knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("knn_hex", knn_op.knn_sql(DOC_PTS_SQL, KNN_K))
 def knn_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = doc_points(spark, sf_dir).select("key", "lat", "lon")
-    n = knn_op.parquet_row_count(f"{sf_dir}/documents.parquet")
+    n = parquet_row_count(f"{sf_dir}/documents.parquet")
     return knn_op.knn_hex_join(pts, KNN_K, n_hint=n)
 
 
@@ -449,7 +450,7 @@ def _knn_corpus_table(spark: SparkSession, sf_dir: str, res: int) -> str:
 
     def build():
         pts = doc_points(spark, sf_dir).select("key", "lat", "lon")
-        return knn_op.indexed_corpus(pts, res)
+        return knn_op.QUAD.corpus(pts, res)
 
     return bucketed_table(
         spark, f"rps_knncorpus_{base}_r{res}_fp{fp}",
@@ -461,21 +462,12 @@ def _knn_corpus_table(spark: SparkSession, sf_dir: str, res: int) -> str:
 @q("knn_bucketed", knn_op.knn_sql(DOC_PTS_SQL, KNN_K))
 def knn_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = doc_points(spark, sf_dir).select("key", "lat", "lon")
-    n = knn_op.parquet_row_count(f"{sf_dir}/documents.parquet")
-    res = knn_op.density_res(n)
-    tbl = _knn_corpus_table(spark, sf_dir, res)
-    # both quadtree levels committed as bucketed layouts, so the hot-cell
-    # branch's candidate join is exchange-free on the corpus side too;
-    # the fine layout only exists where the split engages (see
-    # knn.HOT_SPLIT_MIN_ROWS)
-    fres = min(12, res + knn_op.HOT_RES_DELTA)
-    tbl_f = (
-        _knn_corpus_table(spark, sf_dir, fres)
-        if fres > res and n >= knn_op.HOT_SPLIT_MIN_ROWS
-        else None
-    )
+    n = parquet_row_count(f"{sf_dir}/documents.parquet")
+    # every resolution knn_join runs at (the base level, and the finer
+    # hot-cell level where the split engages) reads a committed layout
     return knn_op.knn_join(
-        pts, KNN_K, res=res, n_hint=n, corpus_table=tbl, corpus_table_fine=tbl_f
+        pts, KNN_K, n_hint=n,
+        corpus_table=lambda res: _knn_corpus_table(spark, sf_dir, res),
     )
 
 

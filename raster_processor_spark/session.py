@@ -26,6 +26,43 @@ ARROW_BATCH_ROWS = 65536
 ARROW_BATCH_BYTES = 16 * 1024 * 1024
 
 
+# Engine confs shared by both session builders. The master, core count,
+# driver memory, driver JVM options and the UI switch belong to whoever
+# launches the JVM (get_spark locally, ``spark-submit`` otherwise), so they
+# are not here.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(ARROW_BATCH_BYTES),
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # ANSI off: the engine relies on wrap-around-free modular arithmetic it
+    # controls itself, and NULL-on-bad-cast matches the reference's masked
+    # array semantics (invalid → masked, products.py get_mask).
+    "spark.sql.ansi.enabled": "false",
+    # ContextCleaner frees broadcasts / shuffle files / RDD blocks only when
+    # driver GC collects their handles; with a large heap organic GCs are
+    # rare and the default periodic GC is 30min — far longer than a whole
+    # bench session. 2min bounds block-manager growth without measurable
+    # overhead.
+    "spark.cleaner.periodicGC.interval": "2min",
+    # reused Python workers are kept forever by default; a session that
+    # mixes many Arrow UDF stages grows the pool monotonically (measured
+    # 66 workers / 6.3GB RSS after one 35-query session). Idle workers
+    # older than 2min are reaped (no-op on Spark versions without it).
+    "spark.python.worker.idleTimeoutSeconds": "120",
+}
+
+
+def _with_engine_conf(builder):
+    for k, v in ENGINE_CONF.items():
+        builder = builder.config(k, v)
+    return builder
+
+
 def get_spark(
     cpus: int | None = None,
     app_name: str = "raster_processor_spark",
@@ -45,45 +82,20 @@ def get_spark(
         shuffle_partitions = max(2 * cpus, 8)
 
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        _with_engine_conf(SparkSession.builder.master(f"local[{cpus}]"))
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # Long-session hygiene (a many-query session accumulates state that
-        # the defaults only reclaim lazily, multiplying late-session query
-        # cost several-fold):
-        #   * ReservedCodeCacheSize: the JVM default (240MB, ~118MB for
-        #     profiled nmethods) fills after a few dozen whole-stage-codegen
-        #     plans; once full the JIT flushes/deoptimizes hot methods and
-        #     heavy queries run partially interpreted. 1g removes the cliff.
-        #   * periodicGC.interval: ContextCleaner frees broadcasts /
-        #     shuffle files / RDD blocks only when driver GC collects their
-        #     handles; with a 48g heap organic GCs are rare and the default
-        #     periodic GC is 30min — far longer than a whole bench session.
-        #     2min bounds block-manager growth without measurable overhead.
+        # ReservedCodeCacheSize: the JVM default (240MB, ~118MB for
+        # profiled nmethods) fills after a few dozen whole-stage-codegen
+        # plans in a long session; once full the JIT flushes/deoptimizes
+        # hot methods and heavy queries run partially interpreted. 1g
+        # removes the cliff.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        # reused Python workers are kept forever by default; a session that
-        # mixes many Arrow UDF stages grows the pool monotonically (measured
-        # 66 workers / 6.3GB RSS after one 35-query session). Idle workers
-        # older than 2min are reaped (no-op on Spark versions without it).
-        .config("spark.python.worker.idleTimeoutSeconds", "120")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # ANSI off: the engine relies on wrap-around-free modular arithmetic it
-        # controls itself, and NULL-on-bad-cast matches the reference's masked
-        # array semantics (invalid → masked, products.py get_mask).
-        .config("spark.sql.ansi.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -122,21 +134,7 @@ def get_spark_submitted(app_name: str = "raster_processor_spark") -> SparkSessio
     which is how the same job script runs unchanged on a real multi-executor
     cluster. Shuffle partitions default from the launcher-provided
     parallelism (2x, the engine heuristic)."""
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.python.worker.idleTimeoutSeconds", "120")
-    )
-    spark = builder.getOrCreate()
+    spark = _with_engine_conf(SparkSession.builder.appName(app_name)).getOrCreate()
     par = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(max(2 * par, 8)))
     spark.sparkContext.setLogLevel("WARN")

@@ -295,26 +295,6 @@ def bucketed_table(
     return safe
 
 
-def write_bucketed(
-    df, table: str, bucket_col: str, n_buckets: int, root: str
-) -> str:
-    """Write ``df`` as a bucketed+sorted parquet table (external location
-    under ``root``); returns the catalog table name to join against."""
-    import re
-
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", f"rps_{table}")
-    path = f"{root}/bucketed/{table}"
-    (
-        df.write.format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .mode("overwrite")
-        .saveAsTable(safe)
-    )
-    return safe
-
-
 def merge_snapshot(
     store: "SnapshotStore",
     spark,

@@ -10,12 +10,12 @@ changed.
 
 The schema of an unchanged file set is pure metadata, so it is memoized
 here keyed by the path's on-disk state (mtime_ns + size of the file, or of
-every entry of a directory — the same staleness treatment as the corpus
+every entry below a directory — the same staleness treatment as the corpus
 fingerprints on the IVF/bucketed-table artifacts). The DATA path is
 untouched: every query still lists and scans the parquet fresh — only the
 schema-inference round trip is skipped — and any rewrite of the inputs
 (changed mtime/size) re-infers. The memo is bounded at one entry per
-distinct path.
+distinct path and kind (schema, row count).
 """
 
 from __future__ import annotations
@@ -24,30 +24,59 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SCHEMA_MEMO: dict[str, tuple[object, object]] = {}
+# One memo for everything derived from a path's file metadata, keyed by
+# (kind, path) and validated against the path's on-disk state.
+_PATH_MEMO: dict[tuple[str, str], tuple[object, object]] = {}
 
 
 def _path_state(path: str):
+    """mtime_ns + size of the file, or of the directory and every file and
+    subdirectory below it (partitioned layouts nest their part files)."""
     st = os.stat(path)
-    if os.path.isdir(path):
-        entries = []
-        for name in sorted(os.listdir(path)):
-            s = os.stat(os.path.join(path, name))
-            entries.append((name, s.st_mtime_ns, s.st_size))
-        return (st.st_mtime_ns, tuple(entries))
-    return (st.st_mtime_ns, st.st_size)
+    if not os.path.isdir(path):
+        return (st.st_mtime_ns, st.st_size)
+    entries = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in dirs + sorted(files):
+            full = os.path.join(root, name)
+            s = os.stat(full)
+            entries.append((os.path.relpath(full, path), s.st_mtime_ns, s.st_size))
+    return (st.st_mtime_ns, tuple(entries))
+
+
+def _memo_get(kind: str, path: str):
+    """(the path's on-disk state, the value memoized for it or None)."""
+    state = _path_state(path)
+    hit = _PATH_MEMO.get((kind, path))
+    return state, (hit[1] if hit is not None and hit[0] == state else None)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Drop-in for ``spark.read.parquet(path)`` with the schema memoized
     against the path's on-disk state (see module docstring)."""
-    state = _path_state(path)
-    hit = _SCHEMA_MEMO.get(path)
-    if hit is not None and hit[0] == state:
-        return spark.read.schema(hit[1]).parquet(path)
+    state, schema = _memo_get("schema", path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     df = spark.read.parquet(path)
-    _SCHEMA_MEMO[path] = (state, df.schema)
+    _PATH_MEMO[("schema", path)] = (state, df.schema)
     return df
+
+
+def parquet_row_count(path: str) -> int:
+    """Exact row count from parquet FOOTERS only — no data scan, no Spark
+    job (pyarrow sums row-group counts from file metadata). This is the
+    same lineage a snapshot manifest records (sources/snapshots.py), used
+    to feed density heuristics without doubling input I/O. Memoized like
+    the schema: several queries re-derive it multiple times per
+    invocation."""
+    state, n = _memo_get("rows", path)
+    if n is None:
+        import pyarrow.dataset as ds
+
+        n = ds.dataset(path, format="parquet").count_rows()
+        _PATH_MEMO[("rows", path)] = (state, n)
+    return n
 
 
 _CONST_DF_MEMO: dict[tuple, DataFrame] = {}

@@ -37,8 +37,7 @@ def _normalize(rows, cols):
     return out
 
 
-@pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_oracle_parity(spark, duck, name):
+def _assert_parity(spark, duck, name):
     spec = REGISTRY[name]
     sdf = spec.spark(spark, SF_ORACLE)
     s_cols = list(sdf.columns)
@@ -57,3 +56,20 @@ def test_oracle_parity(spark, duck, name):
     if sn != dn:
         diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+@pytest.mark.parametrize("name", ORACLE_NAMES)
+def test_oracle_parity(spark, duck, name):
+    _assert_parity(spark, duck, name)
+
+
+@pytest.mark.parametrize("name", ["knn", "knn_hex", "knn_bucketed"])
+def test_oracle_parity_ansi_on(spark, duck, name):
+    # a default Spark 4 session runs with ANSI on, while the engine's tuned
+    # session turns it off: check these queries under the default too
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        _assert_parity(spark, duck, name)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

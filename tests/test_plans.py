@@ -4,6 +4,7 @@ broadcasts stay broadcasts, filters reach the scan, fused aggs shuffle once.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from raster_processor_spark.queries import REGISTRY, pixc_points, with_cell
@@ -12,6 +13,14 @@ from tests.conftest import SF_ORACLE
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _grid_points(spark):
+    # 400 points on a regular 20x20 lattice: every query resolves in ring 3
+    return spark.createDataFrame(
+        [(i, float(i // 20) * 0.01, float(i % 20) * 0.01) for i in range(400)],
+        "key BIGINT, lat DOUBLE, lon DOUBLE",
+    )
 
 
 def test_pip_join_broadcasts_cover_table(spark):
@@ -141,30 +150,37 @@ def test_knn_short_circuit_elides_tail_when_rings_resolve_all(spark):
     # once the materialized phases hold n*k accepted rows, the remaining
     # phases and the brute tail are provably dead and must not appear in
     # the plan (each is a scheduled no-op job otherwise); the result must
-    # stay identical to the lazy form, whose tail is structurally present
+    # stay identical to a call that does not know n (same res, no n_hint),
+    # whose tail is structurally present
     from raster_processor_spark.operators import knn as knn_op
 
-    pts = spark.createDataFrame(
-        [(i, float(i // 20) * 0.01, float(i % 20) * 0.01) for i in range(400)],
-        "key BIGINT, lat DOUBLE, lon DOUBLE",
-    )
-    for join in (knn_op.knn_join, knn_op.knn_hex_join):
+    pts = _grid_points(spark)
+    for join, grid in ((knn_op.knn_join, knn_op.QUAD), (knn_op.knn_hex_join, knn_op.HEX)):
         out = join(pts, 2, n_hint=400)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" not in plan, join.__name__
-        lazy = join(pts, 2, n_hint=400, checkpoint=False)
-        lazy_plan = lazy._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" in lazy_plan, join.__name__
+        assert "BroadcastNestedLoopJoin" not in _plan(out), grid.name
+        unknown = join(pts, 2, res=grid.density_res(400))
+        assert "BroadcastNestedLoopJoin" in _plan(unknown), grid.name
         assert sorted(map(tuple, out.collect())) == sorted(
-            map(tuple, lazy.collect())
-        ), join.__name__
+            map(tuple, unknown.collect())
+        ), grid.name
+
+
+@pytest.mark.parametrize("join", ["knn_join", "knn_hex_join"])
+def test_knn_undercounted_n_hint_raises(spark, join):
+    # every one of the 400 queries resolves in the first ring, so the
+    # accepted rows (400*k) exceed n_hint*k: the hint is provably wrong and
+    # must fail loudly instead of shaping the plan
+    from raster_processor_spark.operators import knn as knn_op
+
+    with pytest.raises(ValueError, match="n_hint=300"):
+        getattr(knn_op, join)(_grid_points(spark), 2, n_hint=300)
 
 
 def test_knn_is_stateless_no_cache_survives_the_query(spark):
     # knn_join must leave NOTHING cached behind (the round-3 version
     # persisted one ring per invocation for the session's lifetime — a
-    # session-amplification source); the dual consumption of each ring's
-    # accepted set rides on ReusedExchange instead.
+    # session-amplification source); each ring's accepted set is a
+    # localCheckpoint, which is not a CacheManager entry.
     from raster_processor_spark.operators import knn as knn_op
 
     spark.catalog.clearCache()
@@ -200,8 +216,9 @@ def test_knn_hex_matches_quad_knn_exactly(spark):
     assert a == b and len(a) > 0
 
 
-def test_knn_hot_cell_split_is_exact_on_skewed_corpus(spark):
-    # the two-level quadtree split (hot cells re-run at a finer res) must
+@pytest.mark.parametrize("join", ["knn_join", "knn_hex_join"])
+def test_knn_hot_cell_split_is_exact_on_skewed_corpus(spark, join):
+    # the two-level split (hot cells re-run at a finer res) must
     # change the PLAN only, never the result: compare split-on vs split-off
     # on a corpus above the gate with a dense blob (7.5% of points in a
     # 0.2-degree cluster — one hot cell at the density-chosen res)
@@ -221,10 +238,9 @@ def test_knn_hot_cell_split_is_exact_on_skewed_corpus(spark):
             F.pmod(F.col("id") * 104729, F.lit(3200)) / 10.0 - 160.0
         ).alias("lon"),
     )
-    a = Counter(map(tuple, knn_op.knn_join(pts, 3, n_hint=n).collect()))
-    b = Counter(
-        map(tuple, knn_op.knn_join(pts, 3, n_hint=n, hot_cap=None).collect())
-    )
+    fn = getattr(knn_op, join)
+    a = Counter(map(tuple, fn(pts, 3, n_hint=n).collect()))
+    b = Counter(map(tuple, fn(pts, 3, n_hint=n, hot_cap=None).collect()))
     assert a == b and sum(a.values()) == 3 * n
 
 
@@ -241,35 +257,30 @@ def test_knn_bucketed_corpus_scan_is_bucket_aligned(spark):
     # the candidate join's corpus side must read the committed bucketed
     # layout (no Exchange above the corpus scan): the scan itself reports
     # bucket alignment, and disabling bucketing must ADD exchanges to the
-    # same query — write-time layout replacing run-time shuffle.
-    # checkpoint=False keeps the ring phases lazy so the candidate join is
-    # visible in the final plan (the default materializes each phase at
-    # build time, truncating the inspectable plan at the phase boundary).
-    from raster_processor_spark.operators import knn as knn_op
-    from raster_processor_spark.queries import (
-        KNN_K,
-        _knn_corpus_table,
-        doc_points,
-    )
+    # same query — write-time layout replacing run-time shuffle. The ring
+    # phases run as build-time jobs, so the candidate join is read from
+    # the SQL executions the shipped query ran while it was built.
+    store = spark._jsparkSession.sharedState().statusStore()
 
-    pts = doc_points(spark, SF_ORACLE).select("key", "lat", "lon")
-    n = knn_op.parquet_row_count(f"{SF_ORACLE}/documents.parquet")
-    res = knn_op.density_res(n)
-    tbl = _knn_corpus_table(spark, SF_ORACLE, res)
+    def phase_plan() -> str:
+        since = int(store.executionsCount())
+        REGISTRY["knn_bucketed"].spark(spark, SF_ORACLE)
+        execs = store.executionsList(since, int(store.executionsCount()) - since)
+        it = execs.iterator()
+        plans = []
+        while it.hasNext():
+            plans.append(it.next().physicalPlanDescription())
+        joins = [p for p in plans if "SortMergeJoin" in p]
+        assert joins, "no ring-phase execution with the candidate join"
+        return joins[0]
 
-    def build():
-        return knn_op.knn_join(
-            pts, KNN_K, res=res, n_hint=n, corpus_table=tbl, checkpoint=False
-        )
-
-    plan = build()._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
+    plan = phase_plan()
     assert "Bucketed: true" in plan
     assert "SelectedBucketsCount: 16 out of 16" in plan
     n_bucketed = plan.count("Exchange")
     spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
     try:
-        plan2 = build()._jdf.queryExecution().executedPlan().toString()
+        plan2 = phase_plan()
     finally:
         spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     assert plan2.count("Exchange") > n_bucketed, (

@@ -213,11 +213,14 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     pts = doc_points(spark, SF_ORACLE).withColumn(
         "cell_id", quad_cell_col(F.col("lat"), F.col("lon"), 7)
     )
-    t1 = snap.write_bucketed(
-        pts.select("key", "cell_id", "n_chars"), "b_pts", "cell_id", 8, str(tmp_path)
+    t1 = snap.bucketed_table(
+        spark, "rps_b_pts", str(tmp_path / "b_pts"),
+        lambda: pts.select("key", "cell_id", "n_chars"), "cell_id", 8,
     )
     aggd = pts.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_rows"))
-    t2 = snap.write_bucketed(aggd, "b_cells", "cell_id", 8, str(tmp_path))
+    t2 = snap.bucketed_table(
+        spark, "rps_b_cells", str(tmp_path / "b_cells"), lambda: aggd, "cell_id", 8
+    )
 
     # disable broadcast so the plan must choose bucket-to-bucket SMJ (at
     # real scale both sides are too big to broadcast — that is the point)
@@ -318,3 +321,21 @@ def test_knn_corpus_table_tracks_corpus_content(spark, tmp_path):
     n2 = spark.table(t2).count()
     assert t1 != t2, "corpus fingerprint not part of the table identity"
     assert (n1, n2) == (40, 60)
+
+
+def test_parquet_row_count_sees_nested_rewrites(tmp_path):
+    """A part file rewritten in place BELOW the top level of a partitioned
+    layout must invalidate the memoized row count (the directory entries
+    at the top level do not change)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from raster_processor_spark.sources.tables import parquet_row_count
+
+    root = tmp_path / "t.parquet"
+    for part in ("p=0", "p=1"):
+        (root / part).mkdir(parents=True)
+        pq.write_table(pa.table({"x": list(range(10))}), root / part / "a.parquet")
+    assert parquet_row_count(str(root)) == 20
+    pq.write_table(pa.table({"x": list(range(25))}), root / "p=1" / "a.parquet")
+    assert parquet_row_count(str(root)) == 35
