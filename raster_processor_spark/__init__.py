@@ -2,9 +2,9 @@
 
 Reproduces the query semantics of SWOTAlgorithms/Raster-Processor (reference at
 /root/reference, read-only) on idiomatic Spark: DataFrame/SQL plans optimized by
-Catalyst, vectorized Arrow/pandas UDFs for the genuinely custom kernels (cell
-encoding, ray-cast point-in-polygon, image decode), and built-in expressions for
-every aggregation kernel so whole-stage codegen covers the hot path.
+Catalyst, vectorized Arrow/pandas UDFs for the genuinely custom kernels
+(ray-cast point-in-polygon, image decode), and built-in expressions for cell
+encoding and every aggregation kernel so whole-stage codegen covers the hot path.
 
 Layout:
   cellindex    — pure-numpy quadcell (S2-style) + hexcell (H3-style) encoders

@@ -19,15 +19,14 @@ Cell id packing (both schemes, fits int64, SQL-expressible):
     cell_id = res * 2^50 + ybin * 2^25 + xbin        (0 <= res <= 15)
 hex ids use (q + 2^24) / (r + 2^24) offsets in place of xbin/ybin.
 
-All encoders are vectorized numpy ufunc pipelines; the Spark entry points are
-Arrow-batched pandas UDFs (north-star requirement: batched cell encoding, no
-per-row Python).
+All encoders are vectorized numpy ufunc pipelines. They are the reference the
+Spark encoders (functions/cells.py, the same arithmetic as SQL expressions)
+and the DuckDB oracles are tested against.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 RES_SHIFT = 2**50
 Y_SHIFT = 2**25
@@ -121,6 +120,11 @@ def quad_disk_offsets(k: int) -> np.ndarray:
 
 # ----------------------------------------------------------------- hexcell ---
 
+def _round_half_away(x: np.ndarray) -> np.ndarray:
+    t = np.trunc(x)
+    return t + np.sign(x) * (np.abs(x - t) >= 0.5)
+
+
 def hex_axial(lat: np.ndarray, lon: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized pointy-top axial hex assignment with cube rounding.
 
@@ -132,11 +136,12 @@ def hex_axial(lat: np.ndarray, lon: np.ndarray, res: int) -> tuple[np.ndarray, n
     y = np.asarray(lat, dtype=np.float64)
     qf = (SQRT3 / 3.0 * x - 1.0 / 3.0 * y) / size
     rf = (2.0 / 3.0 * y) / size
-    # cube round
+    # cube round; ties round half away from zero like SQL ROUND (np.round
+    # rounds half to even, which picks a different cell at qf = -0.5)
     sf = -qf - rf
-    q = np.round(qf)
-    r = np.round(rf)
-    s = np.round(sf)
+    q = _round_half_away(qf)
+    r = _round_half_away(rf)
+    s = _round_half_away(sf)
     dq = np.abs(q - qf)
     dr = np.abs(r - rf)
     ds = np.abs(s - sf)

@@ -1,9 +1,8 @@
-"""Column-function library: Arrow-batched pandas UDFs wrapping the numpy
-kernels, plus pure column expressions for the SQL-expressible pieces."""
+"""Column-function library: built-in Spark expressions (SQL strings and
+Columns) for the SQL-expressible pieces — cell encode, quality words, lon
+wrap, geodesy."""
 
 from raster_processor_spark.functions.cells import (  # noqa: F401
-    hex_cell_udf,
-    quad_cell_udf,
     quad_parent_col,
 )
 from raster_processor_spark.functions.quality import (  # noqa: F401

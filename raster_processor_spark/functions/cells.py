@@ -1,43 +1,84 @@
-"""Cell-encoding Spark surface.
+"""Cell-encoding Spark surface: the one Spark-side definition of each grid's
+bins.
 
-The hot path is an Arrow-batched pandas UDF over the pure-numpy encoders
-(north star: "assigned to H3 (res 7-9) and S2 cells via batched Arrow/pandas
-UDF cell encoding"); batch size is pinned to the reference's 100k chunking
-(session.ARROW_BATCH_ROWS). Parent/rollup math is a pure column expression —
-integer arithmetic stays JVM-side inside whole-stage codegen.
+Every encoder is a Spark SQL expression string over the double columns
+``lat`` and ``lon`` — cellindex's numpy arithmetic spelled once for every
+Spark plan (the registered queries, the images and regeoloc pipelines, the
+streaming job, the spatial-join cover and kNN's ring phases). A codegen'd expression is
+evaluated batch-wise inside the scan's pipeline like any built-in, so no
+cell encode crosses the Python boundary; a string also assembles in one
+py4j call (selectExpr / F.expr). Double literals carry the D suffix: a bare
+``90.0`` is a DECIMAL in Spark SQL. Parent/rollup math is a pure column
+expression — integer arithmetic stays JVM-side inside whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
 
-import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from raster_processor_spark import cellindex as ci
 
 
-def quad_cell_udf(res: int):
-    """pandas UDF (lat, lon) → quadcell id at ``res``; iterator form so the
-    per-batch setup cost is amortized across Arrow batches."""
+def quad_bins_expr(res: int) -> tuple[str, str]:
+    """(ybin, xbin): 2^res clamped lat rows, 2^(res+1) clamped lon cols —
+    cellindex.quad_bins."""
+    ny, nx = 1 << res, 1 << (res + 1)
+    yb = (
+        f"LEAST(GREATEST(CAST(FLOOR((lat + 90.0D) / 180.0D * {ny})"
+        f" AS BIGINT), 0L), {ny - 1}L)"
+    )
+    xb = (
+        f"LEAST(GREATEST(CAST(FLOOR((lon + 180.0D) / 360.0D * {nx})"
+        f" AS BIGINT), 0L), {nx - 1}L)"
+    )
+    return yb, xb
 
-    @F.pandas_udf(LongType())
-    def _encode(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for lat, lon in it:
-            yield pd.Series(ci.quad_encode(lat.to_numpy(), lon.to_numpy(), res))
 
-    return _encode
+def quad_cell_expr(res: int) -> str:
+    """Packed quadcell id res*2^50 + ybin*2^25 + xbin — cellindex.quad_encode."""
+    yb, xb = quad_bins_expr(res)
+    return f"({res}L * {ci.RES_SHIFT}L + ({yb}) * {ci.Y_SHIFT}L + ({xb}))"
 
 
-def hex_cell_udf(res: int):
-    @F.pandas_udf(LongType())
-    def _encode(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for lat, lon in it:
-            yield pd.Series(ci.hex_encode(lat.to_numpy(), lon.to_numpy(), res))
+def hex_bins_expr(res: int) -> tuple[str, str]:
+    """(q, r) cube-rounded pointy-top axial bins — cellindex.hex_axial's
+    arithmetic, operation for operation, so the doubles are bit-identical
+    to the DuckDB oracle's (queries._hex_assign_sql).
 
-    return _encode
+    ROUND on a double is HALF_UP (half away from zero), the same as DuckDB's
+    ROUND: cube rounding is NOT tie-break independent — at qf = -0.5
+    exactly, half-to-even and floor(x + 0.5) both pick a different cell."""
+    s = repr(180.0 / (1 << res))
+    s3 = repr(math.sqrt(3.0) / 3.0)
+    qf = f"(({s3}D * lon - {1.0 / 3.0!r}D * lat) / {s}D)"
+    rf = f"(({2.0 / 3.0!r}D * lat) / {s}D)"
+    sf = f"(-{qf} - {rf})"
+    q0, r0, s0 = f"ROUND({qf})", f"ROUND({rf})", f"ROUND({sf})"
+    dq, dr, ds = f"ABS({q0} - {qf})", f"ABS({r0} - {rf})", f"ABS({s0} - {sf})"
+    fix_q = f"({dq} > {dr} AND {dq} > {ds})"
+    fix_r = f"((NOT {fix_q}) AND {dr} > {ds})"
+    q = f"CAST(CASE WHEN {fix_q} THEN -{r0} - {s0} ELSE {q0} END AS BIGINT)"
+    r = f"CAST(CASE WHEN {fix_r} THEN -{q0} - {s0} ELSE {r0} END AS BIGINT)"
+    return q, r
+
+
+def hex_cell_expr(res: int) -> str:
+    """Packed hexcell id res*2^50 + (r + 2^24)*2^25 + (q + 2^24) —
+    cellindex.hex_encode."""
+    q, r = hex_bins_expr(res)
+    off = ci.HEX_OFFSET
+    return (
+        f"({res}L * {ci.RES_SHIFT}L + (({r}) + {off}L) * {ci.Y_SHIFT}L"
+        f" + ({q}) + {off}L)"
+    )
+
+
+def with_cell(df: DataFrame, res: int, alias: str = "cell_id") -> DataFrame:
+    """Append the quadcell id of (lat, lon) at ``res`` as ``alias``."""
+    return df.withColumn(alias, F.expr(quad_cell_expr(res)))
 
 
 def quad_parent_col(cell: Column, child_res: int, parent_res: int) -> Column:
@@ -52,20 +93,3 @@ def quad_parent_col(cell: Column, child_res: int, parent_res: int) -> Column:
         + F.floor(yb / d).cast("long") * ci.Y_SHIFT
         + F.floor(xb / d).cast("long")
     )
-
-
-def quad_cell_col(lat: Column, lon: Column, res: int) -> Column:
-    """Pure-column quadcell encode (JVM-side twin of the pandas UDF; used when
-    the plan benefits from staying inside whole-stage codegen, e.g. tiny
-    dimension tables where Arrow round-trip overhead dominates)."""
-    ny = 1 << res
-    nx = 1 << (res + 1)
-    yb = F.least(
-        F.greatest(F.floor((lat + 90.0) / 180.0 * ny).cast("long"), F.lit(0)),
-        F.lit(ny - 1),
-    )
-    xb = F.least(
-        F.greatest(F.floor((lon + 180.0) / 360.0 * nx).cast("long"), F.lit(0)),
-        F.lit(nx - 1),
-    )
-    return F.lit(res).cast("long") * ci.RES_SHIFT + yb * ci.Y_SHIFT + xb

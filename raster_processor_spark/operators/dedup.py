@@ -68,8 +68,8 @@ PERMS_VALUES_SQL = (
     + ") AS p(pid, a, b))"
 )
 
-# DuckDB twin of word_id_expr(): left-fold polynomial hash over char codes.
-# list_prepend(0) supplies the same zero accumulator as Spark's aggregate().
+# DuckDB twin of wid_array_col's per-word hash: left-fold polynomial hash
+# over char codes from a zero accumulator.
 WID_SQL = (
     "list_reduce(list_prepend(CAST(0 AS BIGINT), "
     "list_transform(string_split({w}, ''), c -> ascii(c))), "
@@ -95,36 +95,18 @@ sizes AS (SELECT doc_id, COUNT(*) AS ns FROM sh GROUP BY 1)
 """
 
 
-def word_id_expr(word):
-    """64-bit-safe polynomial character hash of a word — computed per token
-    (narrow, codegen'd), identical to WID_SQL in DuckDB. Replaces the vocab
-    dim entirely: no distinct, no global row_number window, no join.
-    wid < 2^31 so 3-wid shingle combining stays within int64."""
-    return F.aggregate(
-        F.transform(F.split(word, ""), lambda c: F.ascii(c).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: F.pmod(acc * F.lit(WID_BASE) + x, F.lit(MERSENNE31)),
-    )
-
-
 def wid_array_col(text):
     """Array of per-token word ids for one document — the whole tokenize +
     hash front-end as ONE narrow projection (no explode, no shuffle).
 
-    The hash itself runs as a vectorized Arrow-batched numpy kernel
-    (_wid_arrays_udf): the JVM twin (wid_array_jvm_col) is pure built-ins
-    but higher-order lambdas are CodegenFallback — interpreted per CHAR —
-    and the batched kernel measures ~25% faster at sf0.1 (0.28-0.35 s vs
-    0.36-0.44 s for the full-corpus hash) with the gap growing with doc
-    size. Both produce identical integers (the kernel folds unicode
-    codepoints via utf-32 decode — exactly what ascii() returns)."""
+    The hash runs as a vectorized Arrow-batched numpy kernel
+    (_wid_arrays_udf), identical to WID_SQL in DuckDB (the kernel folds
+    unicode code points via utf-32 decode — exactly what ascii() returns).
+    wid < 2^31, so 3-wid shingle combining stays within int64. The
+    built-in form (transform + aggregate over the chars) is CodegenFallback,
+    interpreted per char: it made dedup_simhash ~6x slower at sf0.01 and
+    ~40x at sf0.1 (median 8.1 vs 1.4 s and 65.5 vs 1.7 s, local[3])."""
     return _wid_arrays_udf()(text)
-
-
-def wid_array_jvm_col(text):
-    """JVM-expression twin of wid_array_col (no Python boundary) — kept for
-    plans that must stay codegen-only; bit-identical values."""
-    return F.transform(F.split(text, " "), word_id_expr)
 
 
 def _wid_arrays_udf():

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raster_processor_spark import cellindex as ci
+from raster_processor_spark.functions.cells import hex_bins_expr, quad_bins_expr
 from raster_processor_spark.sources.tables import const_df
 
 # Hot-cell split (two-level grid): a cell whose occupancy exceeds
@@ -76,8 +77,9 @@ HOT_SPLIT_MIN_ROWS = 16384
 
 @dataclass(frozen=True)
 class _Grid:
-    """What differs between the two grids; the bins are called b0 and b1
-    and the disk offsets d0 and d1 in the generated SQL."""
+    """What differs between the two grids; the bins (functions/cells.py, the
+    engine's one Spark-side encoder, so both join sides bin alike) are
+    called b0 and b1 and the disk offsets d0 and d1 in the generated SQL."""
 
     name: str
     bins: Callable[[int], tuple[str, str]]  # res -> (b0, b1) SQL over lat/lon
@@ -104,20 +106,6 @@ def density_res(n: int) -> int:
     return max(2, min(12, int(math.log2(max(n, 16) / 0.6) / 2)))
 
 
-def _quad_bin_sqls(res: int) -> tuple[str, str]:
-    """(ybin, xbin) — clamped lat rows, clamped lon cols."""
-    ny, nx = 1 << res, 1 << (res + 1)
-    yb = (
-        f"LEAST(GREATEST(CAST(FLOOR((lat + 90.0D) / 180.0D * {ny})"
-        f" AS BIGINT), 0L), {ny - 1}L)"
-    )
-    xb = (
-        f"LEAST(GREATEST(CAST(FLOOR((lon + 180.0D) / 360.0D * {nx})"
-        f" AS BIGINT), 0L), {nx - 1}L)"
-    )
-    return yb, xb
-
-
 def _quad_cell(res: int, yb: str, xb: str) -> str:
     return f"({yb}) * {1 << (res + 1)} + ({xb})"
 
@@ -129,34 +117,6 @@ def _quad_probe(res: int) -> tuple[str, str]:
         _quad_cell(res, "b0 + d0", f"pmod(b1 + d1, {nx})"),
         f"b0 + d0 >= 0 AND b0 + d0 < {ny}",
     )
-
-
-def _hex_bin_sqls(res: int) -> tuple[str, str]:
-    """(qbin, rbin) cube-rounded axial hex bins (cellindex.hex_axial's
-    arithmetic) as codegen'd SQL — no UDF: the binned table feeds every
-    ring phase, so an Arrow stage here would run several times per query.
-
-    Nearest-integer via FLOOR(+0.5), not ROUND: round() allocates a
-    BigDecimal per value; the tie-break difference (half-away-from-zero vs
-    half-up) is explicitly irrelevant here — cube rounding is exact under
-    ANY tie-break, and both join sides use these same expressions."""
-    s = repr(180.0 / (1 << res))
-    s3 = repr(float(math.sqrt(3.0) / 3.0))
-    two3 = repr(2.0 / 3.0)
-    qf = f"(({s3}D * lon - lat / 3.0D) / {s}D)"
-    rf = f"((lat * {two3}D) / {s}D)"
-    sf = f"(-{qf} - {rf})"
-    q0 = f"CAST(FLOOR({qf} + 0.5D) AS DOUBLE)"
-    r0 = f"CAST(FLOOR({rf} + 0.5D) AS DOUBLE)"
-    s0 = f"CAST(FLOOR({sf} + 0.5D) AS DOUBLE)"
-    dq, dr, ds = (
-        f"ABS({q0} - {qf})", f"ABS({r0} - {rf})", f"ABS({s0} - {sf})"
-    )
-    fix_q = f"({dq} > {dr} AND {dq} > {ds})"
-    fix_r = f"((NOT {fix_q}) AND {dr} > {ds})"
-    qbin = f"CAST(CASE WHEN {fix_q} THEN -{r0} - {s0} ELSE {q0} END AS BIGINT)"
-    rbin = f"CAST(CASE WHEN {fix_r} THEN -{q0} - {s0} ELSE {r0} END AS BIGINT)"
-    return qbin, rbin
 
 
 # composite single-column hex cell id: axial coords are bounded by the
@@ -188,7 +148,7 @@ def _hex_density_res(n: int) -> int:
 # distance: any point outside disk(R) is > R*s away.
 QUAD = _Grid(
     name="quad",
-    bins=_quad_bin_sqls,
+    bins=quad_bins_expr,
     cell=_quad_cell,
     probe=_quad_probe,
     disk_offsets=ci.quad_disk_offsets,
@@ -206,7 +166,7 @@ QUAD = _Grid(
 # neighbor is far in the metric and omitting it cannot change the answer.
 HEX = _Grid(
     name="hex",
-    bins=_hex_bin_sqls,
+    bins=hex_bins_expr,
     cell=_hex_cell,
     probe=lambda res: (_hex_cell(res, "b0 + d0", "b1 + d1"), None),
     disk_offsets=ci.hex_disk_offsets,

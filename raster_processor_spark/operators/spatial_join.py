@@ -31,6 +31,7 @@ from pyspark.sql.types import BooleanType
 
 from raster_processor_spark import cellindex as ci
 from raster_processor_spark import polygons as pg
+from raster_processor_spark.functions.cells import with_cell
 
 COARSE_RES = 6  # 2.8125-degree square cells; polygon radius <= 2 deg → <=4 cells
 
@@ -125,11 +126,8 @@ def point_in_polygon_join(
         lat.alias("lat"),
         lon.alias("lon"),
         *[points[c] for c in keep],
-    ).withColumn(
-        "cover_cell",
-        # tiny arithmetic → stay JVM-side for the candidate key
-        _coarse_cell(F.col("lat"), F.col("lon")),
     )
+    pts = with_cell(pts, COARSE_RES, "cover_cell")
     cand = pts.join(F.broadcast(cover), "cover_cell", "inner")
     refine = pip_refine_udf(n_polys)
     return (
@@ -139,12 +137,6 @@ def point_in_polygon_join(
         .where(F.col("contained"))
         .select("key", "poly_id", *keep)
     )
-
-
-def _coarse_cell(lat: Column, lon: Column) -> Column:
-    from raster_processor_spark.functions.cells import quad_cell_col
-
-    return quad_cell_col(lat, lon, COARSE_RES)
 
 
 # --------------------------------------------------------- SQL oracle twin ---

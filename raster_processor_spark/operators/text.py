@@ -85,7 +85,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling polynomial fingerprint over hashed word-ids with cyclic
     position weights 31^(i mod 16) mod M — deterministic integer arithmetic
     (the windowed analogue of a content-defined rolling hash). Word ids are
-    per-token char hashes (dedup.word_id_expr) and the position-weighted
+    per-token char hashes (dedup.wid_array_col) and the position-weighted
     sum folds over the per-document word-id ARRAY — the whole query is one
     narrow projection (no explode, no shuffle at all; the round-5 form
     shuffled every token through a repartition + groupBy). Each term is

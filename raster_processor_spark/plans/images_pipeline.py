@@ -4,7 +4,7 @@ committed as a resumable snapshot with per-partition lineage.
 
 Stage graph (each stage = one SnapshotStore table):
 
-  images ──georef──► tiles (cell7/8/9 via Arrow pandas-UDF encode)
+  images ──georef──► tiles (cell9 via the JVM-side encode, cell8/7 its parents)
      │                   │ salted repartition by (cell7, salt)  [skew break]
      ├──decode──► stats (mapInPandas numpy codec)
      │                   │
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from raster_processor_spark import datagen, geo
-from raster_processor_spark.functions.cells import quad_cell_udf, quad_parent_col
+from raster_processor_spark.functions.cells import quad_parent_col, with_cell
 from raster_processor_spark.operators import spatial_join as sj
 from raster_processor_spark.sources.snapshots import SnapshotStore
 
@@ -46,9 +46,9 @@ def georef_tiles(images: DataFrame) -> DataFrame:
         geo.lat_col(key).alias("lat"),
         geo.lon_col(key).alias("lon"),
     )
-    pts = pts.withColumn("cell9", quad_cell_udf(9)(F.col("lat"), F.col("lon")))
     return (
-        pts.withColumn("cell8", quad_parent_col(F.col("cell9"), 9, 8))
+        with_cell(pts, 9, "cell9")
+        .withColumn("cell8", quad_parent_col(F.col("cell9"), 9, 8))
         .withColumn("cell7", quad_parent_col(F.col("cell9"), 9, 7))
         .withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(N_SALT)))
     )

@@ -373,13 +373,13 @@ def regeoloc_pipeline(spark: SparkSession, sf_dir: str, store) -> DataFrame:
     height raster, stage 2 commits the gathered+corrected points. Each stage
     is a SnapshotStore.resume_or_compute — a re-run after a crash resumes
     from the last committed snapshot instead of recomputing."""
-    from raster_processor_spark.functions.cells import quad_cell_col
+    from raster_processor_spark.functions.cells import with_cell
     from raster_processor_spark.queries import pixc_points
 
     def _pts():
-        return pixc_points(spark, sf_dir).withColumn(
-            "cell_id", quad_cell_col(F.col("lat"), F.col("lon"), 7)
-        ).select("key", "lat", "lon", "height", "height_w", "cell_id")
+        return with_cell(pixc_points(spark, sf_dir), 7).select(
+            "key", "lat", "lon", "height", "height_w", "cell_id"
+        )
 
     def stage1():
         pts = _pts()

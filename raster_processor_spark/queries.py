@@ -22,9 +22,9 @@ from pyspark.sql import functions as F
 from raster_processor_spark import cellindex as ci
 from raster_processor_spark import geo
 from raster_processor_spark.functions.cells import (
-    quad_cell_col,
-    quad_cell_udf,
+    hex_cell_expr,
     quad_parent_col,
+    with_cell,
 )
 from raster_processor_spark.functions.quality import (
     summary_qual_col,
@@ -173,25 +173,6 @@ def iround(x) -> "F.Column":
     return F.floor(x + F.lit(0.5)).cast("double")
 
 
-def with_cell(df: DataFrame, res: int, alias: str = "cell_id") -> DataFrame:
-    """Arrow-batched pandas-UDF cell assignment (the J2 chunked-transform
-    surface; plan-pinned in tests). Kept on the quality-kernel path
-    (qual_rollup) as the demonstrated Arrow boundary."""
-    return df.withColumn(alias, quad_cell_udf(res)(F.col("lat"), F.col("lon")))
-
-
-def with_cell_jvm(df: DataFrame, res: int, alias: str = "cell_id") -> DataFrame:
-    """JVM-expression cell assignment (bit-identical twin of with_cell —
-    same floor/clamp double arithmetic, see functions.cells.quad_cell_col).
-
-    This is the default for every aggregation query: the Arrow form ships
-    (lat, lon) of the whole fact table to Python workers and back per query
-    just to run two floors — guide §4's first rule (built-ins over UDFs).
-    Measured at sf0.1 it removes an entire ArrowEvalPython stage (~0.2-0.4 s
-    per query) and keeps the scan → agg pipeline in one codegen span."""
-    return df.withColumn(alias, quad_cell_col(F.col("lat"), F.col("lon"), res))
-
-
 @dataclass
 class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
@@ -224,7 +205,7 @@ FROM pts
 """,
 )
 def tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(doc_points(spark, sf_dir), 9, "cell9")
+    pts = with_cell(doc_points(spark, sf_dir), 9, "cell9")
     return pts.select(
         "key",
         "cell9",
@@ -248,7 +229,7 @@ FROM pts GROUP BY 1
 """,
 )
 def cell_agg_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(doc_points(spark, sf_dir), 7)
+    pts = with_cell(doc_points(spark, sf_dir), 7)
     return pts.groupBy("cell_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.avg("n_chars"), 6).alias("avg_chars"),
@@ -278,7 +259,7 @@ def cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (much smaller) res-9 aggregate up the prefix hierarchy — counts are
     re-aggregable, so coarser levels never touch the base table again (the
     same trick a 100 TB rollup needs: |cells| << |points|)."""
-    pts = with_cell_jvm(doc_points(spark, sf_dir), 9, "cell9")
+    pts = with_cell(doc_points(spark, sf_dir), 9, "cell9")
     base9 = pts.groupBy(F.col("cell9").alias("cell_id")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )
@@ -510,7 +491,7 @@ FROM pts GROUP BY 1
 """,
 )
 def wse_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     w = F.col("height_w")
 
     def wm(col: str, scale: float):
@@ -546,7 +527,7 @@ FROM pts GROUP BY 1
 """,
 )
 def water_area_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     cls = F.col("classification")
     return pts.groupBy("cell_id").agg(
         F.round(
@@ -612,7 +593,7 @@ def water_area_uncert(spark: SparkSession, sf_dir: str) -> DataFrame:
     nominal area dividing the fraction layers is the cell's total pixel area
     (the reference divides by the projected nominal cell area; same role,
     and the denominator is guarded for ANSI sessions)."""
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     cls = F.col("classification")
     a = F.col("pixel_area")
     det = F.col("pfd") * (F.lit(1.0) - F.col("pfd")) + F.col("pmd") * (
@@ -687,7 +668,7 @@ def ifgram_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer: flattened complex sum, its magnitude, and coherence = |Σz| / Σ|z|
     (1.0 when all flattened phasors align — the quantity the reference's
     height uncertainty consumes downstream of flatten_interferogram)."""
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     re, im = F.col("ifgram.re"), F.col("ifgram.im")
     t = F.col("phase_t")
     c, s, d = 1 - t * t, 2 * t, 1 + t * t
@@ -725,7 +706,7 @@ def dark_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mode on, where a bare 0-denominator divide is a runtime error. Zero
     # composite denominator yields 0.0 (reference raster_agg.py:266-269),
     # including the all-dark cell case.
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     return pts.groupBy("cell_id").agg(
         F.round(
             agg.dark_frac(
@@ -755,7 +736,7 @@ FROM pts GROUP BY 1
 """,
 )
 def ice_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     return pts.groupBy("cell_id").agg(
         agg.ice_flag(F.col("ice_clim_flag"), 1, "ice_clim"),
         agg.ice_flag(F.col("ice_dyn_flag"), 1, "ice_dyn"),
@@ -894,7 +875,7 @@ def summary_qual_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def mode_class(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     return agg.mode_agg(
         pts.select("cell_id", "classification"), ["cell_id"], "classification", "mode_class"
     )
@@ -920,7 +901,7 @@ def raster_product(spark: SparkSession, sf_dir: str, debug: bool = False) -> Dat
     two aggregation levels is bit-identical; the mode ties break exactly
     like mode_agg's (count DESC, class ASC) via a lexicographic max_by
     (classification is non-null by construction — pmod+1)."""
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     w = F.col("height_w")
     if not debug:
         return pts.groupBy("cell_id").agg(
@@ -995,7 +976,7 @@ FROM a FULL OUTER JOIN b ON a.cell_id = b.cell_id
 """,
 )
 def raster_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     h_int = iround(F.col("height") * 100000.0)
     a = (
         pts.where(F.pmod(F.col("key"), F.lit(2)) == 0)
@@ -1050,7 +1031,7 @@ def _bucketed_compare_sides(spark: SparkSession, sf_dir: str) -> tuple[str, str]
 
     def side(parity: int):
         def build():
-            pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+            pts = with_cell(pixc_points(spark, sf_dir), 7)
             h_int = iround(F.col("height") * 100000.0)
             return (
                 pts.where(F.pmod(F.col("key"), F.lit(2)) == parity)
@@ -1397,7 +1378,7 @@ FROM kept GROUP BY 1
 """,
 )
 def degraded_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7).select(
+    pts = with_cell(pixc_points(spark, sf_dir), 7).select(
         "key", "cell_id", "classification", "height", "qual_word"
     )
     good_sus = F.pmod(F.col("qual_word"), F.lit(4)) < 2
@@ -1446,7 +1427,7 @@ SELECT a.cell_id, 'common' AS side FROM a JOIN b ON a.cell_id = b.cell_id
 """,
 )
 def mask_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     a = pts.where(F.pmod(F.col("key"), F.lit(3)) == 0).select("cell_id").distinct()
     b = pts.where(F.pmod(F.col("key"), F.lit(3)) == 1).select("cell_id").distinct()
     only_a = a.join(b, "cell_id", "left_anti").withColumn("side", F.lit("only_a"))
@@ -1783,7 +1764,7 @@ FROM pts GROUP BY 1
 """,
 )
 def bright_land_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     bright = F.col("qual_word").bitwiseAND(F.lit(128)) > 0
     # integerized weighted sum (ROUND(h*1e5) * int weight): exact in FP, so
     # the partial-agg order cannot perturb the result vs the oracle
@@ -1817,7 +1798,7 @@ FROM cells
 """,
 )
 def cell_centers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(doc_points(spark, sf_dir), 7)
+    pts = with_cell(doc_points(spark, sf_dir), 7)
     cells = pts.select("cell_id").distinct()
     rem = F.col("cell_id") - F.lit(7 * ci.RES_SHIFT)
     yb = (rem / ci.Y_SHIFT).cast("long")
@@ -1893,9 +1874,9 @@ def regeoloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions are raster cells — never a constant-cardinality sort), and
     # the integerized sums make the unordered window bit-equal to the
     # oracle's GROUP BY + join formulation.
-    pts = pixc_points(spark, sf_dir).withColumn(
-        "cell_id", quad_cell_col(F.col("lat"), F.col("lon"), 7)
-    ).select("key", "lat", "lon", "height", "height_w", "cell_id")
+    pts = with_cell(pixc_points(spark, sf_dir), 7).select(
+        "key", "lat", "lon", "height", "height_w", "cell_id"
+    )
     w = F.col("height_w")
     w_cell = Window.partitionBy("cell_id")
     sens = rg._sensors(spark, sf_dir)
@@ -2016,7 +1997,7 @@ FROM sig GROUP BY 1
 """,
 )
 def height_std_deweight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     raw = (F.col("height_var") - 0.05) * F.col("water_frac")
     sigma = (
         F.when(F.abs(raw) <= 0.0, F.lit(100000.0))
@@ -2047,7 +2028,7 @@ FROM pts GROUP BY 1
 """,
 )
 def height_uncert_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     w = F.col("height_w")
     var_int = iround(F.col("height_var") * 100.0)  # exact integer double
     return pts.groupBy("cell_id").agg(
@@ -2072,7 +2053,7 @@ FROM pts GROUP BY 1
 """,
 )
 def sig0_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7)
+    pts = with_cell(pixc_points(spark, sf_dir), 7)
     n = F.count(F.lit(1))
     s_int = iround(F.col("pixel_area") * 10.0)
     u_int = iround(F.col("water_frac") * 100.0)
@@ -2088,14 +2069,14 @@ def sig0_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twin replays the exact double arithmetic (precomputed irrational constants
 # embedded as repr() literals round-trip bit-exactly)
 
-def _hex_assign_sql(res: int) -> str:
+def _hex_assign_sql(res: int, pts_sql: str = DOC_PTS_SQL) -> str:
     import numpy as np
 
     s3 = repr(float(np.sqrt(3.0) / 3.0))
     two3 = repr(2.0 / 3.0)
     size = repr(180.0 / (1 << res))
     return f"""
-WITH pts AS ({DOC_PTS_SQL}),
+WITH pts AS ({pts_sql}),
 f AS (SELECT key, ({s3} * lon - {repr(1.0 / 3.0)} * lat) / {size} AS qf,
              ({two3} * lat) / {size} AS rf
       FROM pts),
@@ -2119,11 +2100,8 @@ FROM fx
 
 @q("hex_tile_assign", _hex_assign_sql(7))
 def hex_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from raster_processor_spark.functions.cells import hex_cell_udf
-
-    pts = doc_points(spark, sf_dir)
-    return pts.select(
-        "key", hex_cell_udf(7)(F.col("lat"), F.col("lon")).alias("hexcell")
+    return doc_points(spark, sf_dir).selectExpr(
+        "key", f"{hex_cell_expr(7)} AS hexcell"
     )
 
 
@@ -2149,7 +2127,7 @@ FROM assigned a JOIN cells c ON a.cell_id = c.cell_id
 """,
 )
 def height_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = with_cell_jvm(pixc_points(spark, sf_dir), 7).select(
+    pts = with_cell(pixc_points(spark, sf_dir), 7).select(
         "key", "height", "height_w", "cell_id"
     )
     w = F.col("height_w")

@@ -18,10 +18,10 @@ from pyspark.sql import SparkSession
 # batches = 31 s to stream 766 MB to workers; 1k-row ≈ 4 MB batches = 4.2 s,
 # at parquet-scan speed). Batch by bytes, not rows — Spark 4 has the direct
 # knob (spark.sql.execution.arrow.maxBytesPerBatch), so the row cap is only
-# the backstop: narrow numeric UDF stages (cell encode, PIP refine, Taylor
-# gather) get full 64k-row batches instead of paying per-batch Python
-# dispatch 64x more often, while binary-payload stages stay byte-bounded at
-# the same ~4-16 MB the 1k-row cap used to give them.
+# the backstop: narrow numeric UDF stages (PIP refine, Taylor gather) get
+# full 64k-row batches instead of paying per-batch Python dispatch 64x more
+# often, while binary-payload stages stay byte-bounded at the same ~4-16 MB
+# the 1k-row cap used to give them.
 ARROW_BATCH_ROWS = 65536
 ARROW_BATCH_BYTES = 16 * 1024 * 1024
 

@@ -80,7 +80,7 @@ def streaming_tile_ingest(spark: SparkSession, images_dir: str) -> DataFrame:
     per-cell state is exactly the batch groupBy over everything seen so
     far, so resuming mid-ingest never recomputes finished files."""
     from raster_processor_spark import datagen
-    from raster_processor_spark.functions.cells import quad_cell_col
+    from raster_processor_spark.functions.cells import with_cell
     from raster_processor_spark.operators.multimodal import with_georef
 
     stream = (
@@ -88,11 +88,7 @@ def streaming_tile_ingest(spark: SparkSession, images_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(images_dir)
     )
-    geo = with_georef(stream)
-    cells = geo.withColumn(
-        "cell_id", quad_cell_col(F.col("lat"), F.col("lon"), 7)
-    )
-    return cells.groupBy("cell_id").agg(
+    return with_cell(with_georef(stream), 7).groupBy("cell_id").agg(
         F.count(F.lit(1)).alias("n_images"),
         F.sum(F.col("w").cast("long") * F.col("h")).alias("total_px"),
     )

@@ -73,3 +73,24 @@ def test_oracle_parity_ansi_on(spark, duck, name):
         _assert_parity(spark, duck, name)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_hex_encode_matches_oracle_at_rounding_tie(spark, duck):
+    # qf is exactly -0.5 here: the oracle's ROUND rounds half away from zero
+    # (q = -1), where half-to-even or floor(x + 0.5) would give q = 0
+    import numpy as np
+
+    from raster_processor_spark import cellindex as ci
+    from raster_processor_spark.functions.cells import hex_cell_expr
+    from raster_processor_spark.queries import _hex_assign_sql
+
+    lat, lon = 0.0, -1.2178482240718669
+    one = f"SELECT 1::BIGINT AS key, {lat!r}::DOUBLE AS lat, {lon!r}::DOUBLE AS lon"
+    want = duck.sql(_hex_assign_sql(7, one)).fetchall()
+    got = (
+        spark.createDataFrame([(1, lat, lon)], "key BIGINT, lat DOUBLE, lon DOUBLE")
+        .selectExpr("key", f"{hex_cell_expr(7)} AS hexcell")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == want == [(1, 8444249318096895)]
+    assert ci.hex_encode(np.array([lat]), np.array([lon]), 7)[0] == want[0][1]

@@ -7,12 +7,16 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from raster_processor_spark.queries import REGISTRY, pixc_points, with_cell
+from raster_processor_spark.queries import REGISTRY
 from tests.conftest import SF_ORACLE
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+# physical nodes that cross the JVM → Python boundary
+_PYTHON_NODES = ("EvalPython", "InPandas", "InArrow")
 
 
 def _grid_points(spark):
@@ -47,24 +51,40 @@ def test_fused_cell_agg_single_shuffle(spark):
     assert "HashAggregate" in plan
 
 
-def test_cell_assign_is_arrow_batched(spark):
-    pts = with_cell(pixc_points(spark, SF_ORACLE), 7)
-    plan = _plan(pts)
-    assert "ArrowEvalPython" in plan  # pandas UDF, not row-at-a-time PythonUDF
+def test_pip_refine_is_arrow_batched(spark):
+    # the exact ray-cast refine is the PIP join's real Python boundary: an
+    # iterator pandas UDF, not row-at-a-time PythonUDF
+    plan = _plan(REGISTRY["pip_join"].spark(spark, SF_ORACLE))
+    assert "ArrowEvalPython" in plan and "_refine" in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_kernel_agg_plan_shape(spark):
     """The qual roll-up must run as JVM partial/final hash aggregation with
-    Arrow-batched cell encode and a pruned scan — the codegen'd shape (Spark
+    a JVM-side cell encode and a pruned scan — the codegen'd shape (Spark
     4's plan string omits WholeStageCodegen markers; assert structure)."""
     df = REGISTRY["qual_rollup"].spark(spark, SF_ORACLE)
     plan = _plan(df)
     assert "partial_max" in plan  # map-side combine before the shuffle
-    assert "ArrowEvalPython" in plan  # vectorized UDF, not BatchEvalPython
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
+    assert not [n for n in _PYTHON_NODES if n in plan]  # no Python at all
     # scan pruned to exactly the consumed lineitem columns
     read_schema = plan.split("ReadSchema:")[1]
     assert "l_quantity" not in read_schema and "l_shipdate" not in read_schema
+
+
+def test_cell_encode_has_no_python_boundary(spark):
+    # quad and hex cell encode are built-in expressions: neither the
+    # hex_tile_assign query nor the flagship tiles stage ships rows to Python
+    from raster_processor_spark.plans.images_pipeline import georef_tiles
+
+    images = spark.range(100).selectExpr(
+        "CAST(id AS STRING) AS image_id", "'c' AS caption", "id * 7919 AS phash"
+    )
+    tiles = georef_tiles(images)
+    for df in (REGISTRY["hex_tile_assign"].spark(spark, SF_ORACLE), tiles):
+        plan = _plan(df)
+        assert not [n for n in _PYTHON_NODES if n in plan], plan
 
 
 def test_antimeridian_polygon_contributes_pairs(spark):

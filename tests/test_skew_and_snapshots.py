@@ -206,13 +206,11 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from raster_processor_spark.queries import doc_points
-    from raster_processor_spark.functions.cells import quad_cell_col
+    from raster_processor_spark.functions.cells import with_cell
     from raster_processor_spark.sources import snapshots as snap
     from tests.conftest import SF_ORACLE
 
-    pts = doc_points(spark, SF_ORACLE).withColumn(
-        "cell_id", quad_cell_col(F.col("lat"), F.col("lon"), 7)
-    )
+    pts = with_cell(doc_points(spark, SF_ORACLE), 7)
     t1 = snap.bucketed_table(
         spark, "rps_b_pts", str(tmp_path / "b_pts"),
         lambda: pts.select("key", "cell_id", "n_chars"), "cell_id", 8,
@@ -267,14 +265,12 @@ def test_incremental_cell_agg_matches_full_recompute(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from raster_processor_spark.queries import doc_points
-    from raster_processor_spark.functions.cells import quad_cell_col
+    from raster_processor_spark.functions.cells import with_cell
     from raster_processor_spark.sources.snapshots import SnapshotStore, refresh_cell_agg
     from tests.conftest import SF_ORACLE
 
     store = SnapshotStore(str(tmp_path))
-    pts = doc_points(spark, SF_ORACLE).withColumn(
-        "cell_id", quad_cell_col(F.col("lat"), F.col("lon"), 7)
-    )
+    pts = with_cell(doc_points(spark, SF_ORACLE), 7)
     d1 = pts.where("key % 2 = 0")
     d2 = pts.where("key % 2 = 1")
     refresh_cell_agg(store, spark, "cagg", d1, sum_cols={"sum_chars": "n_chars"})

@@ -107,7 +107,7 @@ def test_streaming_tile_ingest_equals_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from raster_processor_spark import datagen
-    from raster_processor_spark.functions.cells import quad_cell_col
+    from raster_processor_spark.functions.cells import with_cell
     from raster_processor_spark.operators.multimodal import with_georef
     from raster_processor_spark.streaming import jobs
 
@@ -123,8 +123,10 @@ def test_streaming_tile_ingest_equals_batch(spark, tmp_path):
     }
 
     batch = (
-        with_georef(spark.read.schema(datagen.IMAGES_SCHEMA).parquet(images_dir))
-        .withColumn("cell_id", quad_cell_col(F.col("lat"), F.col("lon"), 7))
+        with_cell(
+            with_georef(spark.read.schema(datagen.IMAGES_SCHEMA).parquet(images_dir)),
+            7,
+        )
         .groupBy("cell_id")
         .agg(
             F.count(F.lit(1)).alias("n_images"),
