@@ -37,31 +37,17 @@ DECODE_STATS_SCHEMA = T.StructType(
 
 
 def decode_stats(images: DataFrame) -> DataFrame:
-    """Per-image decoded-pixel statistics.
-
-    Iterator-of-batches mapInPandas: one decode pass per Arrow batch, numpy
-    per image (ragged shapes prevent full vectorization across images; the
-    per-image ops are vectorized numpy)."""
+    """Per-image decoded-pixel statistics: one ``codec.block_stats`` call
+    per Arrow batch (the same kernel as the worker-side scan,
+    sources/binary_scan.py)."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in (
-                "image_id", "px_mean", "px_std", "px_min", "px_max",
-                "n_bytes", "phash_check",
-            )}
-            for iid, buf, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                px = codec.decode(buf, int(w), int(h), fmt)
-                m, s, lo, hi = codec.pixel_stats(px)
-                out["image_id"].append(iid)
-                out["px_mean"].append(m)
-                out["px_std"].append(s)
-                out["px_min"].append(lo)
-                out["px_max"].append(hi)
-                out["n_bytes"].append(len(buf))
-                out["phash_check"].append(codec.phash64(px))
-            yield pd.DataFrame(out)
+            stats = codec.block_stats(
+                pdf["bytes"].tolist(), pdf["w"].to_numpy(),
+                pdf["h"].to_numpy(), pdf["fmt"].tolist(),
+            )
+            yield pd.DataFrame({"image_id": pdf["image_id"], **stats})
 
     cols = ["image_id", "bytes", "w", "h", "fmt"]
     return images.select(*cols).mapInPandas(run, DECODE_STATS_SCHEMA)

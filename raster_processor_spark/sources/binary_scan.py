@@ -6,12 +6,14 @@ passthrough alone, while 32 raw Python processes reading the same parquet
 files directly decode EVERYTHING in 10 s. At 100 TB the same asymmetry holds
 — you never route the payload through the JVM just to hand it to Python.
 
-Pattern: Spark distributes the FILE LIST (a tiny DataFrame); each Arrow task
-opens its parquet files with pyarrow and streams record batches straight
-into the numpy codec. Spark still owns scheduling, retries, and everything
-downstream of the (small) per-image stats output. On a real cluster the
-files are object-store keys and this is the standard "worker-side IO"
-pattern for multimodal data.
+Pattern: Spark distributes the FILE INDICES (a JVM ``range`` with one
+element per partition, so exactly one file per task and no exchange); each
+Arrow task opens its parquet file with pyarrow and streams 2048-row record
+batches straight into the batched numpy kernel ``codec.block_stats``. The
+file list itself never becomes rows: it rides in the task closure. Spark
+still owns scheduling, retries, and everything downstream of the (small)
+per-image stats output. On a real cluster the files are object-store keys
+and this is the standard "worker-side IO" pattern for multimodal data.
 
 Trade-off vs a JVM scan: no row-group splitting within a file and no data
 locality hints — so generators must write >= 2 files per core
@@ -44,37 +46,28 @@ def scan_decode_stats(spark: SparkSession, images_path: str) -> DataFrame:
     """Per-image decoded-pixel stats, decoding straight from storage in the
     Python workers (multimodal.decode_stats twin for parquet-backed tables)."""
     files = _part_files(images_path)
-    # exactly one file per task: with ~2 files/task, round-robin assignment
-    # makes half the tasks twice as long and the stage tail doubles
-    files_df = spark.createDataFrame(
-        [(f,) for f in files], "path STRING"
-    ).repartition(len(files))
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
 
         cols = ["image_id", "bytes", "w", "h", "fmt"]
         for pdf in it:
-            for path in pdf["path"]:
-                pf = pq.ParquetFile(path)
+            for i in pdf["id"]:
+                pf = pq.ParquetFile(files[i])
                 for batch in pf.iter_batches(batch_size=2048, columns=cols):
-                    d = batch.to_pydict()
-                    out = {k: [] for k in (
-                        "image_id", "px_mean", "px_std", "px_min", "px_max",
-                        "n_bytes", "phash_check",
-                    )}
-                    for iid, buf, w, h, fmt in zip(
-                        d["image_id"], d["bytes"], d["w"], d["h"], d["fmt"]
-                    ):
-                        px = codec.decode(buf, int(w), int(h), fmt)
-                        m, s, lo, hi = codec.pixel_stats(px)
-                        out["image_id"].append(iid)
-                        out["px_mean"].append(m)
-                        out["px_std"].append(s)
-                        out["px_min"].append(lo)
-                        out["px_max"].append(hi)
-                        out["n_bytes"].append(len(buf))
-                        out["phash_check"].append(codec.phash64(px))
-                    yield pd.DataFrame(out)
+                    stats = codec.block_stats(
+                        batch.column("bytes").to_pylist(),
+                        batch.column("w").to_numpy(),
+                        batch.column("h").to_numpy(),
+                        batch.column("fmt").to_pylist(),
+                    )
+                    yield pd.DataFrame(
+                        {"image_id": batch.column("image_id").to_pandas(), **stats}
+                    )
 
-    return files_df.mapInPandas(run, DECODE_STATS_SCHEMA)
+    # one file per task: range splits [0, n) into n one-element slices. A
+    # round-robin repartition of the file rows starts each input partition
+    # at its own random target: on local[3] it gave three of 12 tasks two
+    # files and three none
+    n = len(files)
+    return spark.range(0, n, 1, n).mapInPandas(run, DECODE_STATS_SCHEMA)

@@ -7,7 +7,8 @@ Layout:
     <root>/<table>/snap-<id>/data.parquet/   immutable snapshot data
     <root>/<table>/snap-<id>/manifest.json   row counts + per-partition
                                              lineage (cell range, rows,
-                                             bytes) + metrics
+                                             bytes), the schema, measured
+                                             commit metrics + caller labels
     <root>/<table>/_latest                   atomic pointer (rename commit)
 
 North-rule contract: "resumable from checkpoint with per-partition lineage
@@ -22,6 +23,7 @@ stage is one.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -29,6 +31,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def engine_store_root() -> str:
@@ -90,6 +93,10 @@ class SnapshotStore:
         "bytes": "n_bytes"} → the manifest records per-partition min/max cell
         (the input cell range), row counts, and bytes processed.
 
+        The manifest's ``measured`` key holds what this commit measured:
+        rows, files, bytes_written (the part files' on-disk sizes) and
+        write_s; ``metrics`` holds the caller's labels unchanged.
+
         partition_by writes a hive-partitioned layout (e.g. by a coarse cell
         prefix) so downstream cell-range predicates prune directories at plan
         time — the engine's analogue of Iceberg partition pruning.
@@ -97,6 +104,7 @@ class SnapshotStore:
         snap_id = uuid.uuid4().hex[:12]
         sdir = self._snap_dir(table, snap_id)
         data_dir = os.path.join(sdir, "data.parquet")
+        t0 = time.perf_counter()
         writer = df.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -109,7 +117,11 @@ class SnapshotStore:
         # one lineage job per stage capped scaling efficiency)
         spark = df.sparkSession
         lineage_cols = lineage_cols or {}
-        partitions = self._footer_lineage(data_dir, lineage_cols)
+        files = sorted(
+            glob.glob(os.path.join(data_dir, "part-*.parquet"))
+            or glob.glob(os.path.join(data_dir, "**", "part-*.parquet"), recursive=True)
+        )
+        partitions = self._footer_lineage(data_dir, files, lineage_cols)
         if "bytes" in lineage_cols:
             # exact bytes per committed file: one small agg over the (narrow)
             # committed stats — footers don't store column sums
@@ -118,21 +130,30 @@ class SnapshotStore:
             # across hive partition dirs)
             by_file = {
                 r["f"].split("data.parquet/", 1)[-1]: r["bytes"]
-                for r in spark.read.parquet(data_dir)
+                for r in spark.read.schema(df.schema).parquet(data_dir)
                 .groupBy(F.input_file_name().alias("f"))
                 .agg(F.sum(b).alias("bytes"))
                 .collect()
             }
             for entry in partitions:
                 entry["bytes"] = by_file.get(entry["file"], 0)
+        row_count = int(sum(p["rows"] for p in partitions))
         manifest = {
             "snapshot_id": snap_id,
             "table": table,
             "parent": self.latest_snapshot(table),
             "created_unix": time.time(),
-            "row_count": int(sum(p["rows"] for p in partitions)),
+            "row_count": row_count,
             "n_partitions": len(partitions),
             "partitions": partitions,
+            # measured by this commit: footers and file sizes, no Spark job;
+            # write_s spans the data write and the lineage
+            "measured": {
+                "rows": row_count,
+                "files": len(files),
+                "bytes_written": sum(os.path.getsize(f) for f in files),
+                "write_s": time.perf_counter() - t0,
+            },
             "metrics": metrics or {},
             "schema": df.schema.jsonValue(),
         }
@@ -148,16 +169,12 @@ class SnapshotStore:
         return snap_id
 
     @staticmethod
-    def _footer_lineage(data_dir: str, lineage_cols: dict[str, str]) -> list[dict]:
-        import glob as _glob
-
+    def _footer_lineage(
+        data_dir: str, files: list[str], lineage_cols: dict[str, str]
+    ) -> list[dict]:
         import pyarrow.parquet as pq
 
         out: list[dict] = []
-        files = sorted(
-            _glob.glob(os.path.join(data_dir, "part-*.parquet"))
-            or _glob.glob(os.path.join(data_dir, "**", "part-*.parquet"), recursive=True)
-        )
         for pid, path in enumerate(files):
             md = pq.ParquetFile(path).metadata
             entry: dict = {"_pid": pid, "rows": md.num_rows,
@@ -185,14 +202,17 @@ class SnapshotStore:
         snap_id = snap_id or self.latest_snapshot(table)
         if snap_id is None:
             raise FileNotFoundError(f"no snapshot for table {table!r}")
-        # schema-memoized read (sources/tables.py): committed snapshots are
-        # immutable, and every snapshot-backed query re-reads its layer per
-        # invocation — the ~100 ms footer inference is pure repeat cost
+        path = os.path.join(self._snap_dir(table, snap_id), "data.parquet")
+        # committed snapshots are immutable and their manifest records the
+        # schema: reading with it skips parquet's schema-inference job (a
+        # partitioned layout's partition columns keep their written types).
+        # Manifests without a schema fall back to the memoized inference.
+        schema = (self.manifest(table, snap_id) or {}).get("schema")
+        if schema is not None:
+            return spark.read.schema(StructType.fromJson(schema)).parquet(path)
         from raster_processor_spark.sources.tables import read_parquet
 
-        return read_parquet(
-            spark, os.path.join(self._snap_dir(table, snap_id), "data.parquet")
-        )
+        return read_parquet(spark, path)
 
     def has(self, table: str) -> bool:
         return self.latest_snapshot(table) is not None

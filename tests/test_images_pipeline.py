@@ -136,3 +136,17 @@ def test_decode_stats_phash_matches_input(spark, images_path):
         (stats.fmt == "raw") & (stats.phash_check != stats.phash)
     ).count()
     assert mismatches == 0
+
+
+def test_scan_decode_stats_equals_per_image_reference(spark, images_path):
+    # the pipeline's worker-side decode (batched kernel) against per-image
+    # pixel_stats + len(buf) + phash64 of the stored blocks, bit for bit
+    from raster_processor_spark.sources.binary_scan import scan_decode_stats
+
+    got = sorted(map(tuple, scan_decode_stats(spark, images_path).collect()))
+    want = []
+    for r in spark.read.parquet(images_path).collect():
+        px = codec.decode(bytes(r.bytes), r.w, r.h, r.fmt)
+        want.append((r.image_id,) + codec.pixel_stats(px)
+                    + (len(r.bytes), codec.phash64(px)))
+    assert got == sorted(want) and len(got) == N_IMAGES

@@ -87,6 +87,46 @@ def test_cell_encode_has_no_python_boundary(spark):
         assert not [n for n in _PYTHON_NODES if n in plan], plan
 
 
+def test_driver_constants_are_local_relations(spark, tmp_path):
+    # constants the driver builds reach the JVM as local relations: a plan
+    # over an RDD of driver rows starts a Python worker to re-read them
+    import re
+
+    from raster_processor_spark import datagen
+    from raster_processor_spark.sources.binary_scan import scan_decode_stats
+    from raster_processor_spark.sources.tables import const_df
+
+    c = const_df(spark, ("plan_guard",), lambda: [(1, 2.0)], "a BIGINT, b DOUBLE")
+    assert c._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    assert [tuple(r) for r in c.collect()] == [(1, 2.0)]
+
+    images = str(tmp_path / "images.parquet")
+    datagen.write_images(spark, 200, images, partitions=4)
+    plans = {n: REGISTRY[n].spark(spark, SF_ORACLE) for n in ("polygon_burn", "pip_join")}
+    plans["scan_decode_stats"] = scan_decode_stats(spark, images)
+    for name, df in plans.items():
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in opt and "ExistingRDD" not in opt, (name, opt)
+    # one image file per decode task, with no exchange in front of it
+    assert plans["scan_decode_stats"]._jdf.rdd().getNumPartitions() == 4
+    assert "Exchange" not in _plan(plans["scan_decode_stats"])
+
+    # knn_bucketed runs its ring phases (the offset cross join) as
+    # build-time jobs and returns a plan over their local checkpoints: every
+    # RDD scan the build ran must be such a checkpoint
+    store = spark._jsparkSession.sharedState().statusStore()
+    since = int(store.executionsCount())
+    REGISTRY["knn_bucketed"].spark(spark, SF_ORACLE)
+    execs = store.executionsList(since, int(store.executionsCount()) - since)
+    it, origins = execs.iterator(), []
+    while it.hasNext():
+        origins += re.findall(
+            r"Arguments: \[[^\]]*\], \w+\[\d+\] at (\w+)",
+            it.next().physicalPlanDescription(),
+        )
+    assert origins and set(origins) == {"localCheckpoint"}, origins
+
+
 def test_antimeridian_polygon_contributes_pairs(spark):
     # the dateline-wrap polygon (last poly id) must contribute containment
     # pairs — guards the cover-cell lon-split and the lon-circle refine

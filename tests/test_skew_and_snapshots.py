@@ -117,6 +117,118 @@ def test_snapshot_time_travel_and_parent_chain(spark, tmp_path):
     assert all(p["rows"] > 0 for p in m2["partitions"])
 
 
+def _jobs_run_by(spark, fn):
+    """(fn's result, ids of the Spark jobs it ran)."""
+    group = "snapshot-test-jobs"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_uncommitted_snapshot_is_ignored_and_recomputed(spark, tmp_path, monkeypatch):
+    """A crash between the data write and the _latest rename leaves an
+    orphaned snap-* directory: readers never see it and resume_or_compute
+    computes the stage again."""
+    import os
+
+    from raster_processor_spark.sources import snapshots
+
+    store = SnapshotStore(str(tmp_path))
+    df = spark.range(0, 40).selectExpr("id", "id * 2 AS v")
+
+    def crash(*_args):
+        raise RuntimeError("crash before the commit rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(snapshots.os, "replace", crash)
+        try:
+            store.write(df, "t")
+        except RuntimeError:
+            pass
+    orphans = os.listdir(os.path.join(str(tmp_path), "t"))
+    assert [d for d in orphans if d.startswith("snap-")] and "_latest" not in orphans
+    assert not store.has("t") and store.manifest("t") is None
+
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return spark.range(0, 10).selectExpr("id", "id * 3 AS v")
+
+    got = store.resume_or_compute(spark, "t", compute)
+    assert calls == [1]
+    assert sorted(map(tuple, got.collect())) == [(i, 3 * i) for i in range(10)]
+    assert store.latest_snapshot("t") not in [d[len("snap-"):] for d in orphans]
+    # a second call resumes from the committed snapshot
+    store.resume_or_compute(spark, "t", compute)
+    assert calls == [1]
+
+
+def test_old_snapshot_reads_unchanged_after_newer_commits(spark, tmp_path):
+    # each snapshot is read with the schema its own manifest records, so a
+    # newer commit with another schema leaves an old snapshot's rows intact
+    store = SnapshotStore(str(tmp_path))
+    old = spark.range(0, 20).selectExpr("id", "CAST(id AS STRING) AS tag")
+    s_old = store.write(old, "t")
+    store.write(spark.range(0, 5).selectExpr("id * 1.5D AS x"), "t")
+    store.write(spark.range(0, 7).selectExpr("id", "id AS y", "'z' AS tag"), "t")
+    back = store.read(spark, "t", s_old)
+    assert back.columns == ["id", "tag"]
+    assert sorted(map(tuple, back.collect())) == [(i, str(i)) for i in range(20)]
+    assert store.read(spark, "t").columns == ["id", "y", "tag"]
+
+
+def test_snapshot_read_uses_manifest_schema(spark, tmp_path):
+    """resume_or_compute returns the schema parquet inference would give
+    (all fields nullable) without running the inference job."""
+    import os
+
+    store = SnapshotStore(str(tmp_path))
+
+    def compute():
+        return spark.range(0, 30).selectExpr(
+            "id", "CAST(id AS INT) AS i", "id * 0.5D AS d",
+            "CAST(id AS STRING) AS s", "id % 2 = 0 AS b",
+        )
+
+    fresh = store.resume_or_compute(spark, "t", compute)
+    path = os.path.join(str(tmp_path), "t", f"snap-{store.latest_snapshot('t')}",
+                        "data.parquet")
+    inferred = spark.read.parquet(path).schema
+    assert fresh.schema == inferred
+    resumed = store.resume_or_compute(spark, "t", compute)
+    assert resumed.schema == inferred
+    assert sorted(map(tuple, resumed.collect())) == sorted(map(tuple, compute().collect()))
+    # the first read of a new commit runs no job
+    store.write(compute(), "t2")
+    back, jobs = _jobs_run_by(spark, lambda: store.read(spark, "t2"))
+    assert jobs == [], f"snapshot read ran Spark jobs {jobs}"
+    assert back.schema == inferred
+
+
+def test_manifest_records_measured_commit_metrics(spark, tmp_path):
+    import glob
+    import os
+
+    store = SnapshotStore(str(tmp_path))
+    df = spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 AS n_bytes")
+    snap = store.write(df, "t", lineage_cols={"bytes": "n_bytes"},
+                       metrics={"stage": "decode"})
+    man = store.manifest("t", snap)
+    files = glob.glob(os.path.join(str(tmp_path), "t", f"snap-{snap}",
+                                   "data.parquet", "part-*.parquet"))
+    measured = man["measured"]
+    assert measured["bytes_written"] == sum(os.path.getsize(f) for f in files) > 0
+    assert measured["rows"] == man["row_count"] == 1000
+    assert measured["files"] == len(files) == man["n_partitions"]
+    assert measured["write_s"] > 0
+    assert man["metrics"] == {"stage": "decode"}
+
+
 def test_partitioned_snapshot_prunes_cell_ranges(spark, tmp_path):
     """Snapshots partitioned by a coarse cell prefix prune directories at
     plan time for cell predicates (Iceberg-style partition pruning)."""
