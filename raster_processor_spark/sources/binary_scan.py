@@ -17,7 +17,10 @@ and this is the standard "worker-side IO" pattern for multimodal data.
 
 Trade-off vs a JVM scan: no row-group splitting within a file and no data
 locality hints — so generators must write >= 2 files per core
-(datagen.images_df does).
+(datagen.images_df does). One file per task is cheap: under the engine's
+worker daemon (``worker_daemon.py``) a task's import-cache setup costs
+~0.2 ms, where the stock daemon re-read every zip on the workers' path at
+~0.15 s per task.
 """
 
 from __future__ import annotations

@@ -49,6 +49,15 @@ def engine_store_root() -> str:
     )
 
 
+def _write_atomic(path: str, text: str) -> None:
+    """Write ``text`` to a temporary sibling, then rename it over ``path``:
+    readers see the old file or the whole new one, never a partial one."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex[:6]}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
@@ -76,7 +85,10 @@ class SnapshotStore:
         if not os.path.exists(path):
             return None
         with open(path) as f:
-            return json.load(f)
+            try:
+                return json.load(f)
+            except ValueError:  # truncated or corrupt: not a commit
+                return None
 
     # ------------------------------------------------------------- write ---
     def write(
@@ -157,15 +169,13 @@ class SnapshotStore:
             "metrics": metrics or {},
             "schema": df.schema.jsonValue(),
         }
-        with open(os.path.join(sdir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=1, default=str)
-
-        # atomic commit: write pointer to temp file then rename
-        tdir = self._table_dir(table)
-        tmp = os.path.join(tdir, f"_latest.tmp.{uuid.uuid4().hex[:6]}")
-        with open(tmp, "w") as f:
-            f.write(snap_id)
-        os.replace(tmp, os.path.join(tdir, "_latest"))
+        _write_atomic(
+            os.path.join(sdir, "manifest.json"),
+            json.dumps(manifest, indent=1, default=str),
+        )
+        # the commit: the latest pointer moves only after the whole manifest
+        # is in place
+        _write_atomic(os.path.join(self._table_dir(table), "_latest"), snap_id)
         return snap_id
 
     @staticmethod
@@ -231,8 +241,9 @@ class SnapshotStore:
         snapshot if one exists (resume), else compute → commit → read back.
         Reading back the committed files makes downstream stages consume the
         checkpoint, not the live plan (cheap re-scan, no recompute on
-        lineage replay)."""
-        if not force and self.has(table):
+        lineage replay). A latest snapshot whose manifest is missing or
+        unreadable counts as not committed, and the stage is recomputed."""
+        if not force and self.manifest(table) is not None:
             return self.read(spark, table)
         df = compute()
         self.write(df, table, lineage_cols=lineage_cols, metrics=metrics)

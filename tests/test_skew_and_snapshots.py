@@ -168,6 +168,36 @@ def test_uncommitted_snapshot_is_ignored_and_recomputed(spark, tmp_path, monkeyp
     assert calls == [1]
 
 
+def test_truncated_manifest_is_recomputed(spark, tmp_path):
+    """A latest snapshot whose manifest cannot be parsed is not a commit:
+    resume_or_compute computes the stage again and commits a new snapshot
+    with a whole manifest."""
+    import json
+    import os
+
+    store = SnapshotStore(str(tmp_path))
+
+    def compute():
+        return spark.range(0, 25).selectExpr("id", "id * 5 AS v")
+
+    store.resume_or_compute(spark, "t", compute)
+    broken = store.latest_snapshot("t")
+    path = os.path.join(str(tmp_path), "t", f"snap-{broken}", "manifest.json")
+    with open(path, "r+") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    assert store.manifest("t") is None
+
+    got = store.resume_or_compute(spark, "t", compute)
+    snap = store.latest_snapshot("t")
+    assert snap != broken
+    path = os.path.join(str(tmp_path), "t", f"snap-{snap}", "manifest.json")
+    with open(path) as f:
+        assert json.load(f)["row_count"] == 25
+    assert sorted(map(tuple, got.collect())) == [(i, 5 * i) for i in range(25)]
+    # no temporary file is left behind by the atomic writes
+    assert not [n for n in os.listdir(os.path.dirname(path)) if ".tmp." in n]
+
+
 def test_old_snapshot_reads_unchanged_after_newer_commits(spark, tmp_path):
     # each snapshot is read with the schema its own manifest records, so a
     # newer commit with another schema leaves an old snapshot's rows intact
