@@ -715,15 +715,16 @@ def connected_components_star(
             .distinct()
         )
         # ONE job: both sides are distinct sets, so a +1/-1 signed union
-        # groupBy finds any symmetric-difference row exactly; limit(1)
-        # short-circuits the probe
+        # groupBy finds any symmetric-difference row exactly. No limit(1):
+        # the aggregate completes before a limit could stop it, and every
+        # limit node generates a fresh counter name, so its stage's class
+        # would be compiled again on every round of every run
         changed = (
             e2.withColumn("_s", F.lit(1))
             .unionByName(e.withColumn("_s", F.lit(-1)))
             .groupBy("u", "v")
             .agg(F.sum("_s").alias("_d"))
             .where(F.col("_d") != 0)
-            .limit(1)
             .count()
         )
         if prev_ckpt is not None:

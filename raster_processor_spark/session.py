@@ -57,6 +57,21 @@ ENGINE_CONF = {
     # 66 workers / 6.3GB RSS after one 35-query session). Idle workers
     # older than 2min are reaped (no-op on Spark versions without it).
     "spark.python.worker.idleTimeoutSeconds": "120",
+    # Janino-compiled generated classes live in one JVM-wide LRU cache of
+    # 100 entries by default. The nine perfbench query_mix queries alone
+    # need ~150, so each query evicted the next one's and every warm pass
+    # recompiled 145-146 classes. A cold pass over all 83 registered
+    # queries compiles 931 classes at sf0.01 and 944 at sf0.1 (local[3]);
+    # 4096 is ~4x that, so identical source compiles once per JVM. Static:
+    # read when the JVM first generates code.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # The cache is keyed by source, and by default each class is named after
+    # its codegen stage id. AQE numbers stages in the order it replans them,
+    # which varies from run to run, so identical code under a new id missed
+    # the cache (dedup_ngram_jaccard, mask_anti_join, quality_filter and
+    # zonal_stats_weighted_dist recompiled 2-4 classes on a repeat). Without
+    # the id the cold pass above compiles 931 classes instead of 1,093.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

@@ -63,10 +63,10 @@ def test_oracle_parity(spark, duck, name):
     _assert_parity(spark, duck, name)
 
 
-@pytest.mark.parametrize("name", ["knn", "knn_hex", "knn_bucketed"])
+@pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity_ansi_on(spark, duck, name):
     # a default Spark 4 session runs with ANSI on, while the engine's tuned
-    # session turns it off: check these queries under the default too
+    # session turns it off: check every query under the default too
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:

@@ -1,5 +1,6 @@
 """The engine session's Python worker daemon (``worker_daemon``): its zip
-invalidation rule in-process, and that the session's workers run it."""
+invalidation rule in-process, and that the session's workers run it. Also
+that the session's generated-code cache holds a whole query mix."""
 
 from __future__ import annotations
 
@@ -11,7 +12,10 @@ import textwrap
 import zipfile
 import zipimport
 
+from perfbench.workloads import QUERY_MIX
 from raster_processor_spark import worker_daemon
+from raster_processor_spark.queries import REGISTRY
+from tests.conftest import SF_ORACLE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -140,3 +144,20 @@ def test_session_workers_import_engine_from_any_cwd(tmp_path):
     )
     assert res.returncode == 0, res.stderr[-3000:]
     assert res.stdout.strip().splitlines()[-1] == "[0, 2, 4, 6]"
+
+
+def test_query_mix_repeat_compiles_nothing(spark):
+    """A second round of the perfbench query mix compiles no generated
+    class: the mix's ~150 classes fit the session's codegen cache, where
+    Spark's default 100-entry LRU made each query evict the next one's."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_mix():
+        for name, _ in QUERY_MIX:
+            df = REGISTRY[name].spark(spark, SF_ORACLE)
+            df.write.format("noop").mode("overwrite").save()
+
+    run_mix()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    run_mix()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
