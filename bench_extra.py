@@ -12,7 +12,15 @@ Modes (select with BENCH_EXTRA_MODE):
   decompose  — split each invocation into plan BUILD (Python/py4j DataFrame
              assembly), ANALYZE+OPTIMIZE (explain), and EXECUTE (noop) —
              the split that exposed the kNN family spending ~1s per
-             invocation in driver-side plan assembly.
+             invocation in driver-side plan assembly. Each build also
+             reports its py4j round trips (``py4j_calls``, the seconds
+             spent in them ``py4j_s``, and the JVM handles it freed
+             ``py4j_frees``), read by the same meter as the Tier-1
+             py4j-ceiling test (raster_processor_spark/py4j_meter.py).
+             BENCH_EXTRA_ONLY=query_mix selects perfbench's nine
+             query-mix queries; with SPARK_GRAFT_SF_DIR at the sf0.01
+             tables, SPARK_GRAFT_CPUS=3 and BENCH_EXTRA_PASSES=5 this is
+             the ROADMAP's per-builder assembly table.
 
 Env:
   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
@@ -33,11 +41,13 @@ import io
 import contextlib
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from raster_processor_spark.py4j_meter import py4j_calls  # noqa: E402
 from raster_processor_spark.queries import REGISTRY  # noqa: E402
 from raster_processor_spark.session import get_spark  # noqa: E402
 
@@ -59,6 +69,10 @@ def main() -> None:
     mode = os.environ.get("BENCH_EXTRA_MODE", "isolated")
     passes = int(os.environ.get("BENCH_EXTRA_PASSES", "3"))
     only = os.environ.get("BENCH_EXTRA_ONLY", "")
+    if only == "query_mix":
+        from perfbench.workloads import QUERY_MIX
+
+        only = ",".join(name for name, _ in QUERY_MIX)
     names = [q for q in only.split(",") if q] or DEFAULT_SET
     unknown = sorted(set(names) - set(REGISTRY))
     if unknown:
@@ -74,9 +88,10 @@ def main() -> None:
         if mode == "decompose":
             rows = []
             for _ in range(passes):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                t1 = time.perf_counter()
+                with py4j_calls(spark) as calls:
+                    t0 = time.perf_counter()
+                    df = fn(spark, sf_dir)
+                    t1 = time.perf_counter()
                 buf = io.StringIO()
                 with contextlib.redirect_stdout(buf):
                     df.explain("formatted")
@@ -86,11 +101,19 @@ def main() -> None:
                 rows.append(
                     {
                         "build": round(t1 - t0, 3),
+                        "py4j_calls": calls.calls,
+                        "py4j_s": round(calls.seconds, 3),
+                        "py4j_frees": calls.frees,
                         "analyze": round(t2 - t1, 3),
                         "exec": round(t3 - t2, 3),
                     }
                 )
-            res[name] = rows
+            res[name] = {
+                "passes": rows,
+                "median": {
+                    k: statistics.median(r[k] for r in rows) for k in rows[0]
+                },
+            }
         else:
             ts = []
             for _ in range(passes):

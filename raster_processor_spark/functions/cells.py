@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from raster_processor_spark import cellindex as ci
+from raster_processor_spark.functions.literals import sql_double
 
 
 def quad_bins_expr(res: int) -> tuple[str, str]:
@@ -51,10 +52,10 @@ def hex_bins_expr(res: int) -> tuple[str, str]:
     ROUND on a double is HALF_UP (half away from zero), the same as DuckDB's
     ROUND: cube rounding is NOT tie-break independent — at qf = -0.5
     exactly, half-to-even and floor(x + 0.5) both pick a different cell."""
-    s = repr(180.0 / (1 << res))
-    s3 = repr(math.sqrt(3.0) / 3.0)
-    qf = f"(({s3}D * lon - {1.0 / 3.0!r}D * lat) / {s}D)"
-    rf = f"(({2.0 / 3.0!r}D * lat) / {s}D)"
+    s = sql_double(180.0 / (1 << res))
+    s3 = sql_double(math.sqrt(3.0) / 3.0)
+    qf = f"(({s3} * lon - {sql_double(1.0 / 3.0)} * lat) / {s})"
+    rf = f"(({sql_double(2.0 / 3.0)} * lat) / {s})"
     sf = f"(-{qf} - {rf})"
     q0, r0, s0 = f"ROUND({qf})", f"ROUND({rf})", f"ROUND({sf})"
     dq, dr, ds = f"ABS({q0} - {qf})", f"ABS({r0} - {rf})", f"ABS({s0} - {sf})"

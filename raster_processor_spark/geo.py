@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from raster_processor_spark.functions.literals import sql_double
+
 # LCG-style mixing constants (coprime with the moduli)
 _A_LAT = 179_426_549
 _A_LON = 32_452_867
@@ -73,14 +75,14 @@ def lat_sql_spark(key_sql: str) -> str:
     expression tree the Column builders produced."""
     k = f"pmod({key_sql}, {_KEY_MOD})"
     cold = f"pmod({k} * {_A_LAT}, {_LAT_MOD}) / 1e6 - 60.0D"
-    hot = f"pmod({k} * {_A_LAT}, {_HOT_LAT_MOD}) / 1e6 + {_HOT_LAT0!r}D"
+    hot = f"pmod({k} * {_A_LAT}, {_HOT_LAT_MOD}) / 1e6 + {sql_double(_HOT_LAT0)}"
     return f"(CASE WHEN pmod({key_sql}, 10) = 0 THEN {hot} ELSE {cold} END)"
 
 
 def lon_sql_spark(key_sql: str) -> str:
     k = f"pmod({key_sql}, {_KEY_MOD})"
     cold = f"pmod({k} * {_A_LON}, {_LON_MOD}) / 1e6 - 180.0D"
-    hot = f"pmod({k} * {_A_LON}, {_HOT_LON_MOD}) / 1e6 + {_HOT_LON0!r}D"
+    hot = f"pmod({k} * {_A_LON}, {_HOT_LON_MOD}) / 1e6 + {sql_double(_HOT_LON0)}"
     return f"(CASE WHEN pmod({key_sql}, 10) = 0 THEN {hot} ELSE {cold} END)"
 
 

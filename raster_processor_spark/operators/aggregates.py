@@ -143,20 +143,13 @@ def ice_flag_sql(flag: str, partial_value: int, alias: str) -> str:
 
 # ------------------------------------------------------------------ A14 ------
 
-def qual_bitwise_rollup(conds: list[tuple[Column, int]], alias: str) -> Column:
+def qual_bitwise_rollup_sql(conds: list[tuple[str, int]], alias: str) -> str:
     """Assemble a cell-level quality word: each (condition, bit) contributes
     its bit at most once per cell — bool_or per condition then sum of disjoint
     bits (== bitwise OR). Mirrors raster_agg.py:304-371 where each bit is
-    added once per cell after any()/threshold checks."""
-    word = None
-    for cond, bit in conds:
-        term = F.when(F.max(F.when(cond, F.lit(1)).otherwise(F.lit(0))) == 1, F.lit(bit)).otherwise(F.lit(0))
-        word = term if word is None else word + term
-    assert word is not None
-    return word.cast("long").alias(alias)
-
-
-def qual_bitwise_rollup_sql(conds: list[tuple[str, int]], alias: str) -> str:
+    added once per cell after any()/threshold checks. The same text is the
+    Spark aggregate (``F.expr``) and the DuckDB oracle's, so each dialect
+    passes its own spelling of the conditions."""
     terms = [
         f"(CASE WHEN MAX(CASE WHEN {cond} THEN 1 ELSE 0 END) = 1 THEN {bit} ELSE 0 END)"
         for cond, bit in conds

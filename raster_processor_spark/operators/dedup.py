@@ -147,26 +147,19 @@ def _wid_arrays_udf():
     return _wids
 
 
-def sid_array_col(wids):
+def sid_array_sql(wids: str) -> str:
     """Array of 3-word shingle ids from a word-id array: the same
     prime-weighted fold mod 2^31-1 as the windowed form, evaluated
     positionally inside the row (w[i], w[i+1], w[i+2] ≡ wid, lead(wid,1),
     lead(wid,2)) — bit-identical, but with no doc-partitioned sort."""
-    n = F.size(wids)
-    idx = F.when(n >= 3, F.sequence(F.lit(0), n - 3)).otherwise(
-        F.array().cast("array<int>")
+    idx = (
+        f"CASE WHEN size({wids}) >= 3 THEN sequence(0, size({wids}) - 3)"
+        " ELSE CAST(array() AS ARRAY<INT>) END"
     )
-    return F.transform(
-        idx,
-        lambda i: F.pmod(
-            F.pmod(
-                F.get(wids, i) * F.lit(SID_P) + F.get(wids, i + 1),
-                F.lit(MERSENNE31),
-            )
-            * F.lit(SID_P)
-            + F.get(wids, i + 2),
-            F.lit(MERSENNE31),
-        ),
+    return (
+        f"transform({idx}, i -> pmod(pmod(get({wids}, i) * {SID_P}"
+        f" + get({wids}, i + 1), {MERSENNE31}) * {SID_P}"
+        f" + get({wids}, i + 2), {MERSENNE31}))"
     )
 
 
@@ -178,14 +171,13 @@ def shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     has to re-aggregate the exploded stream back into arrays (a
     corpus-sized collect_list shuffle — see _jaccard_pairs)."""
     d = _read_parquet(spark, f"{sf_dir}/documents.parquet")
-    # materialize the wid array as its own projection: sid_array_col reads
+    # materialize the wid array as its own projection: sid_array_sql reads
     # it three times per element, and Catalyst only de-duplicates a
     # multi-referenced expensive alias across a Project boundary (inlining
     # it would re-hash the whole document per access)
     w = d.select("doc_id", wid_array_col(F.col("text")).alias("_wids"))
-    return w.select(
-        "doc_id",
-        F.array_distinct(sid_array_col(F.col("_wids"))).alias("_sids"),
+    return w.selectExpr(
+        "doc_id", f"array_distinct({sid_array_sql('_wids')}) AS _sids"
     )
 
 
@@ -193,7 +185,7 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, sid) 3-word shingle ids.
 
     Fully narrow: word ids are per-token char hashes and the 3-gram fold
-    runs positionally over the per-document word-id ARRAY (sid_array_col),
+    runs positionally over the per-document word-id ARRAY (sid_array_sql),
     so the scan → project → explode pipeline has NO shuffle at all — the
     round-5 form repartitioned by doc_id and sorted every document for a
     lead() window just to pair adjacent tokens the array already holds.
@@ -201,8 +193,8 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally distinct by construction (one row per document), replacing the
     distinct()'s shuffle too. Values are bit-identical to the DuckDB twin
     (same integer fold; collision probability ~|shingles|²/2^32)."""
-    return shingle_arrays(spark, sf_dir).select(
-        "doc_id", F.explode("_sids").alias("sid")
+    return shingle_arrays(spark, sf_dir).selectExpr(
+        "doc_id", "explode(_sids) AS sid"
     )
 
 
@@ -454,8 +446,8 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = hashed.selectExpr("doc_id", *packed_exprs)
     n_longs = len(packed_exprs)
     agged = packed.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"p{j}").alias(f"s{j}") for j in range(n_longs)],
+        F.expr("count(1) AS n"),
+        *[F.expr(f"sum(p{j}) AS s{j}") for j in range(n_longs)],
     )
     lane_mask = (1 << SIMHASH_LANE_BITS) - 1
     terms = []

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from raster_processor_spark import cellindex as ci
 from raster_processor_spark.functions.cells import hex_bins_expr, quad_bins_expr
+from raster_processor_spark.functions.literals import sql_double
 from raster_processor_spark.sources.tables import const_df
 
 # Hot-cell split (two-level grid): a cell whose occupancy exceeds
@@ -245,7 +246,7 @@ def _ring_phases(
             " OVER (PARTITION BY qkey) AS _kth",
         )
         got = ranked.where(
-            f"_cnt >= {k} AND _kth < {limit!r}D AND rank <= {k}"
+            f"_cnt >= {k} AND _kth < {sql_double(limit)} AND rank <= {k}"
         ).select("qkey", "nkey", "dist2", "rank").localCheckpoint(eager=True)
         accepted = _union(accepted, got)
         if n_exact is not None:

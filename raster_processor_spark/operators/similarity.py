@@ -517,9 +517,8 @@ def _block_scored_pairs(
     carry bit-identical cosines)."""
     schema = "query_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
     coarse = qdf.sparkSession.sparkContext.defaultParallelism * 4
-    kc = [F.col(c) for c in key_cols]
-    qg = qdf.withColumn("_g", F.pmod(F.xxhash64(*kc), F.lit(coarse)))
-    ng = ndf.withColumn("_g", F.pmod(F.xxhash64(*kc), F.lit(coarse)))
+    g = f"pmod(xxhash64({', '.join(key_cols)}), {coarse}) AS _g"
+    qg, ng = qdf.selectExpr("*", g), ndf.selectExpr("*", g)
     empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
 
     def block(qpdf, cpdf):
@@ -937,11 +936,11 @@ def ann_ivf_topk(
         spark, "q_" + _ivf_index_key(sf_dir, n, n_centroids, IVF_ITERS),
         cmat, cids,
     )
-    qs = e.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    qs = e.where(f"pmod(vec_id, {query_mod}) = 0").selectExpr(
+        "vec_id AS query_id", "embedding AS qe"
     )
     qp = qs.withColumn(
-        "cluster", F.explode(_topn_cid_udf(bc, nprobe)(F.col("qe")))
+        "cluster", F.explode(_topn_cid_udf(bc, nprobe)("qe"))
     )
     # Scoring is COGROUPED BY CLUSTER and vectorized (_block_scored_pairs,
     # shared with the SRP family; measured 28 s -> ~3 s vs per-pair
@@ -952,16 +951,17 @@ def ann_ivf_topk(
     # (same two vectors, same op order in every group), so dedup the
     # SCALAR rows after scoring.
     scored = _block_scored_pairs(
-        qp.select("cluster", "query_id", "qe"),
-        corpus.select("cluster", "neighbor_id", "ne"),
+        qp.selectExpr("cluster", "query_id", "qe"),
+        corpus.selectExpr("cluster", "neighbor_id", "ne"),
         ["cluster"],
     ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine",
-                F.col("rank").cast("long").alias("rank"))
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
+        )
+        .where(f"rank <= {k}")
+        .selectExpr("query_id", "neighbor_id", "cosine",
+                    "CAST(rank AS BIGINT) AS rank")
     )

@@ -25,7 +25,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
@@ -97,9 +97,9 @@ def pip_refine_udf(n_polys: int):
 def point_in_polygon_join(
     points: DataFrame,
     n_polys: int,
-    lat: Column,
-    lon: Column,
-    key: Column,
+    lat: str,
+    lon: str,
+    key: str,
     keep: list[str] | None = None,
 ) -> DataFrame:
     """→ DataFrame(key, poly_id[, *keep]) of exact containment pairs, the
@@ -111,7 +111,9 @@ def point_in_polygon_join(
     key afterwards (guide §3: that join re-shuffles the whole fact table
     by a key that has nothing to do with the polygon layout). The refine
     UDF still sees only (poly_id, lon, lat) — payload columns ride the
-    plan untouched."""
+    plan untouched. ``lat``, ``lon`` and ``key`` are Spark SQL expressions
+    over ``points`` (column names, usually), so each stage assembles in one
+    py4j call."""
     spark = points.sparkSession
     from raster_processor_spark.sources.tables import const_df
 
@@ -121,21 +123,16 @@ def point_in_polygon_join(
         "cover_cell BIGINT, poly_id BIGINT",
     )
     keep = keep or []
-    pts = points.select(
-        key.alias("key"),
-        lat.alias("lat"),
-        lon.alias("lon"),
-        *[points[c] for c in keep],
+    pts = points.selectExpr(
+        f"{key} AS key", f"{lat} AS lat", f"{lon} AS lon", *keep
     )
     pts = with_cell(pts, COARSE_RES, "cover_cell")
     cand = pts.join(F.broadcast(cover), "cover_cell", "inner")
     refine = pip_refine_udf(n_polys)
     return (
-        cand.withColumn(
-            "contained", refine(F.col("poly_id"), F.col("lon"), F.col("lat"))
-        )
-        .where(F.col("contained"))
-        .select("key", "poly_id", *keep)
+        cand.withColumn("contained", refine("poly_id", "lon", "lat"))
+        .where("contained")
+        .selectExpr("key", "poly_id", *keep)
     )
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from raster_processor_spark.functions.literals import sql_double
 from raster_processor_spark.sources.tables import read_parquet as _read_parquet
 
 STOPWORDS = ["the", "a"]
@@ -16,27 +17,23 @@ FP_POWERS = [pow(31, i, FP_MOD) for i in range(16)]  # cyclic position weights
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token/char/stopword stats + a quality score + lang heuristic."""
-    d = _read_parquet(spark, f"{sf_dir}/documents.parquet").select(
-        "doc_id", "n_chars", F.split("text", " ").alias("ws")
+    d = _read_parquet(spark, f"{sf_dir}/documents.parquet").selectExpr(
+        "doc_id", "n_chars", "split(text, ' ') AS ws"
     )
-    n_tokens = F.size("ws")
-    n_distinct = F.size(F.array_distinct("ws"))
-    stop_hits = F.size(F.filter("ws", lambda w: w.isin(STOPWORDS)))
-    # single-spaced text → char count excluding separators
-    avg_wlen = (F.col("n_chars") - (n_tokens - 1)).cast("double") / n_tokens
-    quality = (
-        n_distinct.cast("double") / n_tokens
-        + F.when(stop_hits > 0, 0.5).otherwise(0.0)
-    )
-    lang_pred = F.when(stop_hits > 0, F.lit("en")).otherwise(F.lit("unk"))
-    return d.select(
+    stop = ", ".join(f"'{w}'" for w in STOPWORDS)
+    stop_hits = f"size(filter(ws, w -> w IN ({stop})))"
+    # single-spaced text → char count excluding separators; one selectExpr
+    # call assembles the whole projection
+    return d.selectExpr(
         "doc_id",
-        n_tokens.cast("long").alias("n_tokens"),
-        n_distinct.cast("long").alias("n_distinct"),
-        stop_hits.cast("long").alias("stop_hits"),
-        avg_wlen.alias("avg_word_len"),
-        quality.alias("quality"),
-        lang_pred.alias("lang_pred"),
+        "CAST(size(ws) AS BIGINT) AS n_tokens",
+        "CAST(size(array_distinct(ws)) AS BIGINT) AS n_distinct",
+        f"CAST({stop_hits} AS BIGINT) AS stop_hits",
+        "CAST(n_chars - (size(ws) - 1) AS DOUBLE) / size(ws) AS avg_word_len",
+        "CAST(size(array_distinct(ws)) AS DOUBLE) / size(ws)"
+        f" + CASE WHEN {stop_hits} > 0 THEN {sql_double(0.5)}"
+        f" ELSE {sql_double(0.0)} END AS quality",
+        f"CASE WHEN {stop_hits} > 0 THEN 'en' ELSE 'unk' END AS lang_pred",
     )
 
 

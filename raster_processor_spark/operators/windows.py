@@ -58,32 +58,37 @@ def asof_join(
     geoloc_raster.py:139-158, as the ordered variant). Implemented as a
     union + last(ignorenulls) running window — one shuffle, no range
     explosion; the idiomatic Spark as-of pattern."""
-    part_cols = part_cols or []
-    f = facts.withColumn("_ts", F.col(fact_ts)).withColumn("_is_fact", F.lit(1))
-    d = dim.withColumn("_ts", F.col(dim_ts)).withColumn("_is_fact", F.lit(0))
-    for c in dim_cols:
-        f = f.withColumn(c, F.lit(None).cast(d.schema[c].dataType))
-    for c in facts.columns:
-        if c not in d.columns:
-            d = d.withColumn(c, F.lit(None).cast(facts.schema[c].dataType))
-    u = f.select(*facts.columns, *dim_cols, "_ts", "_is_fact").unionByName(
-        d.select(*facts.columns, *dim_cols, "_ts", "_is_fact")
+    fact_types, dim_types = dict(facts.dtypes), dict(dim.dtypes)
+    f = facts.selectExpr(
+        *fact_types,
+        *[f"CAST(NULL AS {dim_types[c]}) AS {c}" for c in dim_cols],
+        f"{fact_ts} AS _ts", "1 AS _is_fact",
+    )
+    d = dim.selectExpr(
+        *[c if c in dim_types else f"CAST(NULL AS {t}) AS {c}"
+          for c, t in fact_types.items()],
+        *dim_cols, f"{dim_ts} AS _ts", "0 AS _is_fact",
     )
     # dim rows sort before fact rows at equal ts → "<=" semantics; dim-side
     # ties at equal ts break deterministically by the payload columns
     # (last row in order wins → the maximum payload)
-    w = (
-        Window.partitionBy(*part_cols)
-        .orderBy(
-            F.col("_ts").asc(),
-            F.col("_is_fact").asc(),
-            *[F.col(c).asc_nulls_first() for c in dim_cols],
-        )
-        .rowsBetween(Window.unboundedPreceding, 0)
+    part = f"PARTITION BY {', '.join(part_cols)} " if part_cols else ""
+    order = ", ".join(
+        ["_ts ASC", "_is_fact ASC"] + [f"{c} ASC NULLS FIRST" for c in dim_cols]
     )
-    for c in dim_cols:
-        u = u.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return u.where(F.col("_is_fact") == 1).drop("_ts", "_is_fact")
+    over = (
+        f"OVER ({part}ORDER BY {order}"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    return (
+        f.unionByName(d)
+        .selectExpr(
+            *fact_types, *[f"last({c}, true) {over} AS {c}" for c in dim_cols],
+            "_is_fact",
+        )
+        .where("_is_fact = 1")
+        .drop("_is_fact")
+    )
 
 
 # ---------------------------------------------------------- interval join ---

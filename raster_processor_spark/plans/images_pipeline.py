@@ -134,7 +134,7 @@ def run_pipeline(
             spark,
             "poly_pairs",
             lambda: sj.point_in_polygon_join(
-                tiles, N_POLYS, F.col("lat"), F.col("lon"), F.col("image_id")
+                tiles, N_POLYS, "lat", "lon", "image_id"
             ).withColumnRenamed("key", "image_id"),
             metrics={"stage": "pip_join", "n_polys": N_POLYS},
         )

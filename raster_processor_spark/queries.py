@@ -26,6 +26,7 @@ from raster_processor_spark.functions.cells import (
     quad_parent_col,
     with_cell,
 )
+from raster_processor_spark.functions.literals import sql_double
 from raster_processor_spark.functions.quality import (
     summary_qual_col,
     summary_qual_sql,
@@ -284,9 +285,7 @@ def cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("pip_join", sj.pip_join_sql(DOC_PTS_SQL, N_POLYS))
 def pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = doc_points(spark, sf_dir)
-    return sj.point_in_polygon_join(
-        pts, N_POLYS, F.col("lat"), F.col("lon"), F.col("key")
-    )
+    return sj.point_in_polygon_join(pts, N_POLYS, "lat", "lon", "key")
 
 
 # =============================================================== J5+A17 ======
@@ -311,8 +310,7 @@ def zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes containment pairs directly — no join back to the fact table
     pts = doc_points(spark, sf_dir)
     pip = sj.point_in_polygon_join(
-        pts, N_POLYS, F.col("lat"), F.col("lon"), F.col("key"),
-        keep=["n_chars"],
+        pts, N_POLYS, "lat", "lon", "key", keep=["n_chars"],
     )
     return (
         pip
@@ -362,9 +360,7 @@ GROUP BY 1
 def zonal_class_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = pixc_points(spark, sf_dir)
     pos = pts.select("key", "lat", "lon").distinct()
-    pip = sj.point_in_polygon_join(
-        pos, N_POLYS, F.col("lat"), F.col("lon"), F.col("key")
-    )
+    pip = sj.point_in_polygon_join(pos, N_POLYS, "lat", "lon", "key")
     cls = F.col("classification")
     return (
         pip.join(pts, "key")
@@ -766,30 +762,33 @@ FROM pts GROUP BY 1
 """
 
 
+# the Spark spelling of the roll-up: D-suffixed double literals
+_QUAL_HIGH = f"height > {sql_double(550.0)}"
+_QUAL_VAR = f"height_var > {sql_double(0.07)}"
+_QUAL_CONDS_SPARK: list[tuple[str, int]] = [
+    ("(qual_word & 1) > 0", 1 << 1),
+    ("(qual_word & 2) > 0", 1 << 3),
+    (_QUAL_VAR, 1 << 11),
+    (_QUAL_HIGH, 1 << 20),
+]
+
+
 @q("qual_rollup", f"WITH pts AS ({PIXC_PTS_SQL})\n{_QUAL_ROLLUP_BODY_SQL}")
 def qual_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = with_cell(pixc_points(spark, sf_dir), 7)
-    qw = F.col("qual_word")
-    conds = [
-        (qw.bitwiseAND(F.lit(1)) > 0, 1 << 1),
-        (qw.bitwiseAND(F.lit(2)) > 0, 1 << 3),
-        (F.col("height_var") > 0.07, 1 << 11),
-        (F.col("height") > 550.0, 1 << 20),
-    ]
 
-    def any_of(cond):
-        return F.max(F.when(cond, F.lit(1)).otherwise(F.lit(0))) == 1
+    def any_of(cond: str) -> str:
+        return f"max(CASE WHEN {cond} THEN 1 ELSE 0 END) = 1"
 
-    summary = (
-        F.when(any_of(F.col("height") > 550.0), F.lit(3))
-        .when(any_of(F.col("height_var") > 0.07), F.lit(2))
-        .when(any_of(qw.bitwiseAND(F.lit(3)) > 0), F.lit(1))
-        .otherwise(F.lit(0))
-    )
     return pts.groupBy("cell_id").agg(
-        agg.qual_bitwise_rollup(conds, "qual_bitwise"),
-        summary.alias("qual_summary"),
-        F.count(F.lit(1)).alias("n_pix"),
+        F.expr(agg.qual_bitwise_rollup_sql(_QUAL_CONDS_SPARK, "qual_bitwise")),
+        F.expr(
+            f"CASE WHEN {any_of(_QUAL_HIGH)} THEN 3"
+            f" WHEN {any_of(_QUAL_VAR)} THEN 2"
+            f" WHEN {any_of('(qual_word & 3) > 0')} THEN 1"
+            " ELSE 0 END AS qual_summary"
+        ),
+        F.expr("count(1) AS n_pix"),
     )
 
 
@@ -831,18 +830,14 @@ def qual_rollup_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = brn.burn_flags_cached(spark, N_POLYS)
     # the rollup side is per-cell (bounded by the 2^15-cell grid, not by
     # the fact table) — broadcast it so the dense mask layer never shuffles
-    j = flags.join(F.broadcast(rollup), "cell_id", "left")
-    base = F.coalesce(F.col("qual_bitwise"), F.lit(brn.EMPTY_FILL_BITWISE))
-    bits = (
-        base
-        + F.when(F.col("missing_flag"), F.lit(brn.QUAL_IND_MISSING_KARIN_DATA)).otherwise(F.lit(0))
-        + F.when(F.col("inner_swath_flag"), F.lit(brn.QUAL_IND_INNER_SWATH)).otherwise(F.lit(0))
-    )
-    return j.select(
+    return flags.join(F.broadcast(rollup), "cell_id", "left").selectExpr(
         "cell_id",
-        bits.cast("long").alias("qual_bitwise"),
-        F.coalesce(F.col("qual_summary"), F.lit(brn.QUAL_IND_BAD)).cast("int").alias("qual_summary"),
-        F.coalesce(F.col("n_pix"), F.lit(0)).cast("long").alias("n_pix"),
+        f"CAST(coalesce(qual_bitwise, {brn.EMPTY_FILL_BITWISE})"
+        f" + CASE WHEN missing_flag THEN {brn.QUAL_IND_MISSING_KARIN_DATA} ELSE 0 END"
+        f" + CASE WHEN inner_swath_flag THEN {brn.QUAL_IND_INNER_SWATH} ELSE 0 END"
+        " AS BIGINT) AS qual_bitwise",
+        f"CAST(coalesce(qual_summary, {brn.QUAL_IND_BAD}) AS INT) AS qual_summary",
+        "CAST(coalesce(n_pix, 0) AS BIGINT) AS n_pix",
     )
 
 
@@ -1176,25 +1171,20 @@ FROM clicks c
 )
 def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("tus")
+    tus = "unix_micros(CAST(ts AS TIMESTAMP))"
+    clicks = ev.where("event_type = 'click'").selectExpr(
+        "event_id", "user_id", f"{tus} AS tus"
     )
-    marks = ev.where(F.col("event_type").isin("signup", "purchase")).select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("mtus"),
-        F.col("value").alias("asof_value"),
+    marks = ev.where("event_type IN ('signup', 'purchase')").selectExpr(
+        "user_id", f"{tus} AS m_ts", "value AS asof_value"
     )
     # deterministic tie-break at equal ts: highest value wins (matches oracle)
     joined = win.asof_join(
-        clicks,
-        marks.withColumnRenamed("mtus", "m_ts"),
-        fact_ts="tus",
-        dim_ts="m_ts",
-        dim_cols=["asof_value"],
-        part_cols=["user_id"],
+        clicks, marks, fact_ts="tus", dim_ts="m_ts",
+        dim_cols=["asof_value"], part_cols=["user_id"],
     )
-    return joined.select(
-        "event_id", "user_id", F.round(F.col("asof_value"), 6).alias("asof_value")
+    return joined.selectExpr(
+        "event_id", "user_id", "round(asof_value, 6) AS asof_value"
     )
 
 
@@ -1484,23 +1474,24 @@ FROM ({PIXC_PTS_SQL})
 """
 
 
+# percentile specs and extra aggregates (Spark and DuckDB parse them alike)
+_WEM_SPECS = [("abs(e)", 0.68, "abs_e68_w"), ("e", 0.5, "e50_w")]
+_WEM_EXTRA_AGGS = {
+    "n": "COUNT(*)",
+    "wmean_e": "ROUND(SUM(_w * _v1) / SUM(_w), 6)",
+    "wstd_e": (
+        "ROUND(sqrt(SUM(_w * _v1 * _v1) / SUM(_w)"
+        " - (SUM(_w * _v1) / SUM(_w)) * (SUM(_w * _v1) / SUM(_w))), 6)"
+    ),
+}
+
+
 def _wem_oracle() -> str:
     from raster_processor_spark.operators import percentiles as pctl
 
     return pctl.weighted_percentiles_fused_sql(
-        _WEM_SRC_SQL,
-        ["classification"],
-        "w",
-        "key",
-        [("abs(e)", 0.68, "abs_e68_w"), ("e", 0.5, "e50_w")],
-        extra_aggs_sql={
-            "n": "COUNT(*)",
-            "wmean_e": "ROUND(SUM(_w * _v1) / SUM(_w), 6)",
-            "wstd_e": (
-                "ROUND(sqrt(SUM(_w * _v1 * _v1) / SUM(_w)"
-                " - (SUM(_w * _v1) / SUM(_w)) * (SUM(_w * _v1) / SUM(_w))), 6)"
-            ),
-        },
+        _WEM_SRC_SQL, ["classification"], "w", "key", _WEM_SPECS,
+        extra_aggs_sql=_WEM_EXTRA_AGGS,
     )
 
 
@@ -1511,32 +1502,14 @@ def weighted_error_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/std come out of ONE window+groupBy pass (was 3 shuffles + 2 joins)."""
     from raster_processor_spark.operators import percentiles as pctl
 
-    pts = pixc_points(spark, sf_dir)
-    base = pts.select(
-        "classification",
-        "key",
-        (F.col("height") - F.col("pixel_area") / 5.0).alias("e"),
-        F.col("height_w").alias("w"),
+    base = pixc_points(spark, sf_dir).selectExpr(
+        "classification", "key",
+        f"height - pixel_area / {sql_double(5.0)} AS e", "height_w AS w",
     )
-    w, e = F.col("_w"), F.col("_v1")  # post-window aliases (e sorts spec 1)
     return pctl.weighted_percentiles_fused(
-        base,
-        ["classification"],
-        F.col("w"),
-        F.col("key"),
-        [(F.abs(F.col("e")), 0.68, "abs_e68_w"), (F.col("e"), 0.5, "e50_w")],
-        extra_aggs={
-            "n": F.count(F.lit(1)),
-            "wmean_e": F.round(F.sum(w * e) / F.sum(w), 6),
-            "wstd_e": F.round(
-                F.sqrt(
-                    F.sum(w * e * e) / F.sum(w)
-                    - (F.sum(w * e) / F.sum(w)) * (F.sum(w * e) / F.sum(w))
-                ),
-                6,
-            ),
-        },
-    ).select("classification", "n", "wmean_e", "wstd_e", "abs_e68_w", "e50_w")
+        base, ["classification"], "w", "key", _WEM_SPECS,
+        extra_aggs_sql=_WEM_EXTRA_AGGS,
+    ).selectExpr("classification", "n", "wmean_e", "wstd_e", "abs_e68_w", "e50_w")
 
 
 # ================================================================= A17+ ======
@@ -1583,22 +1556,22 @@ def pixc_points_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_ZSW_SPECS = [("abs(e)", 0.68, "abs_e68_w")]
+_ZSW_EXTRA_AGGS = {
+    "n_points": "COUNT(*)",
+    "wse_wmean": "ROUND(SUM(_w * height) / SUM(_w), 6)",
+    "area_total": "ROUND(SUM(pixel_area), 6)",
+}
+
+
 def _zsw_oracle() -> str:
     from raster_processor_spark.operators import percentiles as pctl
 
     pip = sj.pip_join_sql(_PIXC_PIP_SRC_SQL, N_POLYS)
     src = _ZSW_PTS_SQL.replace("{PIP}", pip)
     return pctl.weighted_percentiles_fused_sql(
-        src,
-        ["poly_id"],
-        "height_w",
-        "key",
-        [("abs(e)", 0.68, "abs_e68_w")],
-        extra_aggs_sql={
-            "n_points": "COUNT(*)",
-            "wse_wmean": "ROUND(SUM(_w * height) / SUM(_w), 6)",
-            "area_total": "ROUND(SUM(pixel_area), 6)",
-        },
+        src, ["poly_id"], "height_w", "key", _ZSW_SPECS,
+        extra_aggs_sql=_ZSW_EXTRA_AGGS,
     )
 
 
@@ -1610,26 +1583,13 @@ def _zsw_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (pruned) candidate set
     pts = pixc_points_unique(spark, sf_dir)
     pip = sj.point_in_polygon_join(
-        pts, N_POLYS, F.col("lat"), F.col("lon"), F.col("ukey"),
+        pts, N_POLYS, "lat", "lon", "ukey",
         keep=["height", "height_w", "pixel_area"],
     )
-    return pip.select(
-        "key",
-        "poly_id",
-        "height",
-        "height_w",
-        "pixel_area",
-        (F.col("height") - F.col("pixel_area") / 5.0).alias("e"),
+    return pip.selectExpr(
+        "key", "poly_id", "height", "height_w", "pixel_area",
+        f"height - pixel_area / {sql_double(5.0)} AS e",
     )
-
-
-_ZSW_EXTRA_AGGS = {
-    "n_points": lambda: F.count(F.lit(1)),
-    "wse_wmean": lambda: F.round(
-        F.sum(F.col("_w") * F.col("height")) / F.sum("_w"), 6
-    ),
-    "area_total": lambda: F.round(F.sum("pixel_area"), 6),
-}
 
 
 @q("zonal_stats_weighted", _zsw_oracle())
@@ -1639,13 +1599,9 @@ def zonal_stats_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raster_processor_spark.operators import percentiles as pctl
 
     return pctl.weighted_percentiles_fused(
-        _zsw_src(spark, sf_dir),
-        ["poly_id"],
-        F.col("height_w"),
-        F.col("key"),
-        [(F.abs(F.col("e")), 0.68, "abs_e68_w")],
-        extra_aggs={n: f() for n, f in _ZSW_EXTRA_AGGS.items()},
-    ).select("poly_id", "n_points", "wse_wmean", "area_total", "abs_e68_w")
+        _zsw_src(spark, sf_dir), ["poly_id"], "height_w", "key", _ZSW_SPECS,
+        extra_aggs_sql=_ZSW_EXTRA_AGGS,
+    ).selectExpr("poly_id", "n_points", "wse_wmean", "area_total", "abs_e68_w")
 
 
 # the scale twin: identical output and THE SAME oracle (integer weights
@@ -1667,7 +1623,7 @@ def zonal_stats_weighted_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("key"),
         0.68,
         "abs_e68_w",
-        extra_aggs={n: f() for n, f in _ZSW_EXTRA_AGGS.items()},
+        extra_aggs={n: F.expr(e) for n, e in _ZSW_EXTRA_AGGS.items()},
     ).select("poly_id", "n_points", "wse_wmean", "area_total", "abs_e68_w")
 
 

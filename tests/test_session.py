@@ -1,6 +1,7 @@
 """The engine session's Python worker daemon (``worker_daemon``): its zip
 invalidation rule in-process, and that the session's workers run it. Also
-that the session's generated-code cache holds a whole query mix."""
+that the session's generated-code cache holds a whole query mix, and that
+each query-mix plan is assembled in a bounded number of py4j round trips."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import zipimport
 
 from perfbench.workloads import QUERY_MIX
 from raster_processor_spark import worker_daemon
+from raster_processor_spark.py4j_meter import py4j_calls
 from raster_processor_spark.queries import REGISTRY
 from tests.conftest import SF_ORACLE
 
@@ -161,3 +163,38 @@ def test_query_mix_repeat_compiles_nothing(spark):
     before = metrics.METRIC_COMPILATION_TIME().getCount()
     run_mix()
     assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
+# py4j round trips of one warm build of each query-mix query at sf0.01:
+# the count measured when the ceiling was set, plus ~50% headroom. A
+# Column-DSL node costs a create call (and a free), so a builder that goes
+# back to assembling its stages node by node lands far above its ceiling
+# (polygon_burn's Column-DSL build took 3,267 calls).
+_PY4J_MEASURED = {
+    "pip_join": 92,
+    "polygon_burn": 155,
+    "knn_bucketed": 170,
+    "qual_rollup_dense": 99,
+    "weighted_error_metrics": 135,
+    "dedup_simhash": 204,
+    "ann_ivf_topk": 191,
+    "text_stats": 33,
+    "asof_join": 83,
+}
+PY4J_CEILINGS = {name: n * 3 // 2 for name, n in _PY4J_MEASURED.items()}
+
+
+def test_query_mix_builds_stay_under_py4j_ceilings(spark):
+    """Each query-mix plan assembles in a bounded number of py4j round
+    trips: one call per stage (selectExpr / where / F.expr strings), not
+    one per expression node."""
+    assert sorted(PY4J_CEILINGS) == sorted(name for name, _ in QUERY_MIX)
+    calls = {}
+    for name, _ in QUERY_MIX:
+        build = REGISTRY[name].spark
+        build(spark, SF_ORACLE)  # warm: build-once artifacts, memos
+        with py4j_calls(spark) as c:
+            build(spark, SF_ORACLE)
+        calls[name] = c.calls
+    over = {n: (calls[n], PY4J_CEILINGS[n]) for n in calls if calls[n] > PY4J_CEILINGS[n]}
+    assert not over, f"py4j calls over ceiling (calls, ceiling): {over}"

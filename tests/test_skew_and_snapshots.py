@@ -68,7 +68,7 @@ def test_hot_polygon_join_task_sizes_stay_bounded(spark):
         )
     )
     joined = sj.point_in_polygon_join(
-        pts, N_POLYS, F.col("lat"), F.col("lon"), F.col("key")
+        pts, N_POLYS, "lat", "lon", "key"
     )
     per_poly = {
         r.poly_id: r.c
