@@ -26,8 +26,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 import zlib
 

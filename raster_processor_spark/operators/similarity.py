@@ -1,29 +1,36 @@
 """Similarity search over embedding columns.
 
-* brute-force cosine top-k — the exact baseline (cogrouped slice scoring
-  with a broadcast-joined query set: no driver collect, slice-local top-k
-  then one global rank window);
-* IVF-bucketed ANN — cluster assignment (numpy pandas UDF) + probe-N search,
-  the scale path: the candidate join touches only probed clusters. On this
-  synthetic UNIFORM corpus recall tracks the probe fraction (no cluster
-  structure to exploit), so the default nprobe is high; on real clustered
-  corpora the same plan probes a small fraction.
+Every Spark path scores candidates through ONE blocked cosine scorer,
+``score_blocks``: a cogroup of (block key, query vector) rows against
+(block key, neighbour vector) rows, one fold-exact cosine matrix per block,
+and a small ``emit`` that picks the rows each block returns.
+
+* brute-force cosine top-k — the exact baseline: one block per corpus
+  slice, the query set replicated to every slice, each block's per-query
+  top-k, then one global rank window (``_rank_topk``);
+* IVF-bucketed ANN — cluster assignment (numpy pandas UDF) + probe-N
+  search, blocks keyed by cluster: the candidate join touches only probed
+  clusters. On this synthetic UNIFORM corpus recall tracks the probe
+  fraction (no cluster structure to exploit), so the default nprobe is
+  high; on real clustered corpora the same plan probes a small fraction;
+* SRP (hyperplane) LSH ANN — blocks keyed by (band, bucket);
 * blocked exact near-dup join — full-recall thresholded similarity at
-  matmul speed with bounded replication (no crossJoin).
+  matmul speed with bounded replication (no crossJoin): blocks keyed by
+  the block pair, each emitting the pairs with cosine >= tau.
 
 Cosine arithmetic is a sequential left-fold with double casts, matching the
-DuckDB oracle's list_reduce fold bit-for-bit.
+DuckDB oracle's list_reduce fold bit-for-bit. Every ordering is (cosine
+DESC, id ASC): ``_topk_order`` inside numpy, ``_rank_topk`` in Spark.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 from raster_processor_spark.sources.tables import read_parquet as _read_parquet
 
 DIM = 64
@@ -47,76 +54,141 @@ def _seq_norm2(a: np.ndarray) -> np.ndarray:
     return acc
 
 
+_SCORED = "query_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
+
+# emit(block key, query ids, neighbour ids, (queries x neighbours) cosine)
+# -> the block's (query ids, neighbour ids, cosines) to return
+Emit = Callable[
+    [tuple, np.ndarray, np.ndarray, np.ndarray],
+    tuple[np.ndarray, np.ndarray, np.ndarray],
+]
+
+
+def _cos_rows(m: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """(rows x cols) cosine with the fold-exact op order (bit-matches the
+    SQL twin: dot fold / (sqrt(norm fold) * sqrt(norm fold)))."""
+    return _seq_dot(m, c) / (
+        np.sqrt(_seq_norm2(m))[:, None] * np.sqrt(_seq_norm2(c))[None, :]
+    )
+
+
+def _topk_order(
+    cos: np.ndarray, ids: np.ndarray, k: int, last: np.ndarray | None = None
+) -> np.ndarray:
+    """Column indices of each row's top-k of ``cos`` (rows x cols) by
+    (cosine DESC, id ASC), cells flagged in ``last`` ranked after all the
+    others. np.lexsort is stable and keyed, unlike bare argsort(-cos) whose
+    tie order is unspecified; each key keeps its own dtype (int64 ids)."""
+    keys = (np.broadcast_to(ids, cos.shape), -cos)
+    if last is not None:
+        keys += (last,)
+    return np.lexsort(keys, axis=1)[:, :k]
+
+
+def _topk_emit(k: int) -> Emit:
+    """Each query's top-k neighbours within one block, self-pairs dropped.
+
+    Pushing the top-k into the block is exact for any blocking in which a
+    (query, neighbour) pair occurs at most once per block: the pair carries
+    the same cosine in every block that holds it, so a pair in the global
+    top-k is in the top-k of each of those blocks."""
+
+    def emit(_key, qids, nids, cos):
+        self_pair = nids[None, :] == qids[:, None]
+        order = _topk_order(cos, nids, k, last=self_pair)
+        rows = np.arange(len(qids))[:, None]
+        keep = ~self_pair[rows, order]
+        return (
+            np.broadcast_to(qids[:, None], order.shape)[keep],
+            nids[order][keep],
+            cos[rows, order][keep],
+        )
+
+    return emit
+
+
+def score_blocks(q: DataFrame, n: DataFrame, key_cols: list[str], emit: Emit) -> DataFrame:
+    """The embedding family's one scorer: q (key_cols..., query_id, qe)
+    against n (key_cols..., neighbor_id, ne), block by block →
+    (query_id, neighbor_id, cosine) rows chosen by ``emit``.
+
+    Each block's (queries x neighbours) cosine is ONE numpy matrix op with
+    the fold-exact sequence, and each embedding crosses the Arrow boundary
+    once per block instead of once per pair (a per-pair expression — HOF
+    fold or unrolled — evaluates the 64-dim fold millions of times and falls
+    out of efficient codegen; measured 4-9x slower at the 10x scale point).
+
+    The cogroup key is a COARSE hash of the block key (a few chunks per
+    core), with the exact blocks formed by a pandas groupby inside the
+    chunk: cogrouping directly on the block key spawns one Arrow/pandas
+    round-trip per block, and with thousands of near-empty blocks that
+    per-group overhead dominated (measured 2x at sf0.1 for the SRP
+    family). Per-task memory is one chunk plus one block's cosine matrix."""
+    coarse = q.sparkSession.sparkContext.defaultParallelism * 4
+    g = f"pmod(xxhash64({', '.join(key_cols)}), {coarse}) AS _g"
+
+    def mat(s: pd.Series) -> np.ndarray:
+        return np.stack(s.to_numpy()).astype(np.float64)
+
+    def score(qpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
+        nsubs = dict(iter(npdf.groupby(key_cols, sort=False)))
+        out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+        for key, qsub in qpdf.groupby(key_cols, sort=False):
+            nsub = nsubs.get(key)
+            if nsub is not None:
+                out.append(emit(
+                    key,
+                    qsub["query_id"].to_numpy(dtype=np.int64),
+                    nsub["neighbor_id"].to_numpy(dtype=np.int64),
+                    _cos_rows(mat(qsub["qe"]), mat(nsub["ne"])),
+                ))
+        qq, nn, cc = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"query_id": qq, "neighbor_id": nn, "cosine": cc})
+
+    return (
+        q.selectExpr("*", g).groupBy("_g")
+        .cogroup(n.selectExpr("*", g).groupBy("_g"))
+        .applyInPandas(score, _SCORED)
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The global (cosine DESC, neighbor_id ASC) rank window over scored
+    (query_id, neighbor_id, cosine) rows, cut at rank k."""
+    return (
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
+        )
+        .where(f"rank <= {k}")
+        .selectExpr("query_id", "neighbor_id", "cosine",
+                    "CAST(rank AS BIGINT) AS rank")
+    )
+
+
 def ann_brute_topk(
     spark: SparkSession, sf_dir: str, k: int, query_mod: int
 ) -> DataFrame:
     """Exact cosine top-k for the query subset (vec_id % query_mod == 0).
 
-    Fully distributed — the query set is a broadcast-joined DataFrame (never
-    collected to the driver, so a corpus-proportional query set cannot OOM
-    the driver). The corpus streams through a cogrouped applyInPandas that
-    scores one (corpus-slice x full-query-broadcast) block per task with the
-    bit-exact sequential fold and emits only each slice's local top-k per
-    query (a correct superset of the global top-k); a final window ranks
+    Fully distributed — the query set is never collected to the driver, so
+    a corpus-proportional query set cannot OOM it. The corpus is hashed into
+    one slice per core and the query set is replicated to every slice; each
+    slice is one ``score_blocks`` block that emits only its per-query top-k
+    (a correct superset of the global top-k), and ``_rank_topk`` ranks
     globally over n_slices*k rows per query."""
     e = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     par = spark.sparkContext.defaultParallelism
-    qs = e.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    qs = e.where(f"pmod(vec_id, {query_mod}) = 0").selectExpr(
+        f"explode(sequence(0, {par - 1})) AS slice",
+        "vec_id AS query_id", "embedding AS qe",
     )
-    corpus = (
-        e.select("vec_id", "embedding")
-        .withColumn("slice", F.pmod(F.xxhash64("vec_id"), F.lit(par)).cast("int"))
+    corpus = e.selectExpr(
+        f"CAST(pmod(xxhash64(vec_id), {par}) AS INT) AS slice",
+        "vec_id AS neighbor_id", "embedding AS ne",
     )
-    # replicate the query set once per corpus slice (broadcast nest-loop on
-    # the tiny slice-id dim — the query VECTORS move through the shuffle as
-    # a broadcast-joined side, not a driver closure)
-    slices = spark.range(par).select(F.col("id").cast("int").alias("slice"))
-    q_rep = qs.crossJoin(F.broadcast(slices))
-
-    schema = "query_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
-
-    def score_slice(key, qpdf, cpdf):
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        qm = np.stack(qpdf["qe"].to_numpy()).astype(np.float64)
-        qn = np.sqrt(_seq_norm2(qm))
-        nids = cpdf["vec_id"].to_numpy(dtype=np.int64)
-        nm = np.stack(cpdf["embedding"].to_numpy()).astype(np.float64)
-        cos = _seq_dot(qm, nm) / (qn[:, None] * np.sqrt(_seq_norm2(nm))[None, :])
-        out_q, out_n, out_c = [], [], []
-        for qi in range(len(qids)):
-            mask = nids != qids[qi]
-            cand_ids = nids[mask]
-            cand_cos = cos[qi][mask]
-            # slice-local top-k with the global tie order (-cos, id)
-            order = np.lexsort((cand_ids, -cand_cos))[:k]
-            out_q.append(np.full(len(order), qids[qi]))
-            out_n.append(cand_ids[order])
-            out_c.append(cand_cos[order])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
-    local = (
-        q_rep.groupBy("slice")
-        .cogroup(corpus.groupBy("slice"))
-        .applyInPandas(score_slice, schema)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine",
-                F.col("rank").cast("long").alias("rank"))
-    )
+    return _rank_topk(score_blocks(qs, corpus, ["slice"], _topk_emit(k)), k)
 
 
 def ann_brute_topk_sql(k: int, query_mod: int) -> str:
@@ -144,72 +216,49 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
 """
 
 
-def embedding_near_dup_pairs(
-    spark: SparkSession, sf_dir: str, tau: float, n_blocks: int = 8
-) -> DataFrame:
+NEAR_DUP_BLOCKS = 8
+
+
+def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cosine >= tau).
 
     Blocked exact similarity join: at tau this low (near-orthogonal on
     64-dim data, with qualifying pairs straddling the threshold) no LSH /
     IVF candidate scheme can guarantee recall 1, so the scale design is to
     do the full O(n^2) FLOPs at vectorized speed with BOUNDED data movement
-    instead of pretending to prune. Vectors are hashed into n_blocks blocks;
-    the B(B+1)/2 block-pair work units each score one (block x block) tile
-    in numpy inside applyInPandas and emit only pairs >= tau. Shuffle volume
-    is n*(B+1) rows (each vector joins B+1 work units) — never the n^2 rows
-    of a crossJoin — and per-task memory is two blocks plus one tile of the
-    cosine matrix. At 100 TB, B scales ~ sqrt(n^2/mem) and the tile matmuls
-    are the (unavoidable) compute floor. FP semantics bit-match the SQL fold
-    (_seq_dot / _seq_norm2)."""
-    e = _read_parquet(spark, f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
-    blk = F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
-    m = e.withColumn("blk", blk)
-    from raster_processor_spark.sources.tables import const_df
-
-    wu = const_df(
-        spark, ("blockpairs", n_blocks),
-        lambda: [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "ba INT, bb INT",
+    instead of pretending to prune. Vectors are hashed into B =
+    NEAR_DUP_BLOCKS blocks; each of the B(B+1)/2 block pairs (ba <= bb) is
+    one ``score_blocks`` block that emits only pairs >= tau. A vector in
+    block b joins the pairs (b, b..B-1) as a query and (0..b, b) as a
+    neighbour, so shuffle volume is n*(B+1) rows — never the n^2 rows of a
+    crossJoin — and per-task memory is two blocks plus one tile of the
+    cosine matrix. At 100 TB, B scales ~ sqrt(n^2/mem) and the tile
+    matmuls are the (unavoidable) compute floor."""
+    e = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
+    blk = f"CAST(pmod(xxhash64(vec_id), {NEAR_DUP_BLOCKS}) AS INT)"
+    side_a = e.selectExpr(
+        f"{blk} AS ba",
+        f"explode(sequence({blk}, {NEAR_DUP_BLOCKS - 1})) AS bb",
+        "vec_id AS query_id", "embedding AS qe",
     )
-    rows_a = (
-        F.broadcast(wu).join(m.withColumnRenamed("blk", "ba"), "ba")
-        .select("ba", "bb", F.lit(0).alias("side"), "vec_id", "embedding")
+    side_b = e.selectExpr(
+        f"explode(sequence(0, {blk})) AS ba",
+        f"{blk} AS bb",
+        "vec_id AS neighbor_id", "embedding AS ne",
     )
-    rows_b = (
-        F.broadcast(wu).join(m.withColumnRenamed("blk", "bb"), "bb")
-        .select("ba", "bb", F.lit(1).alias("side"), "vec_id", "embedding")
-    )
-    both = rows_a.unionByName(rows_b)
 
-    schema = "vec_a BIGINT, vec_b BIGINT, cosine DOUBLE"
-
-    def score_tile(key, pdf):
-        ba, bb = key
-        a = pdf[pdf["side"] == 0]
-        b = pdf[pdf["side"] == 1]
-        if a.empty or b.empty:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-        ida = a["vec_id"].to_numpy(dtype=np.int64)
-        idb = b["vec_id"].to_numpy(dtype=np.int64)
-        ma = np.stack(a["embedding"].to_numpy()).astype(np.float64)
-        mb = np.stack(b["embedding"].to_numpy()).astype(np.float64)
-        cos = _seq_dot(ma, mb) / (
-            np.sqrt(_seq_norm2(ma))[:, None] * np.sqrt(_seq_norm2(mb))[None, :]
-        )
+    def emit(key, ida, idb, cos):
         ia, ib = np.where(cos >= tau)
         va, vb = ida[ia], idb[ib]
-        if ba == bb:
-            # both sides hold the same block: keep each unordered pair once
-            keep = va < vb
-        else:
-            # disjoint blocks: each unordered pair appears exactly once;
-            # normalize to vec_a < vec_b
-            keep = np.ones(len(va), dtype=bool)
-        va, vb, cv = va[keep], vb[keep], cos[ia, ib][keep]
-        lo, hi = np.minimum(va, vb), np.maximum(va, vb)
-        return pd.DataFrame({"vec_a": lo, "vec_b": hi, "cosine": cv})
+        # both sides hold the same block: keep each unordered pair once;
+        # disjoint blocks hold each unordered pair exactly once
+        keep = (va < vb) | (key[0] != key[1])
+        va, vb = va[keep], vb[keep]
+        return np.minimum(va, vb), np.maximum(va, vb), cos[ia, ib][keep]
 
-    return both.groupBy("ba", "bb").applyInPandas(score_tile, schema)
+    return score_blocks(side_a, side_b, ["ba", "bb"], emit).selectExpr(
+        "query_id AS vec_a", "neighbor_id AS vec_b", "cosine"
+    )
 
 
 def embedding_near_dup_sql(tau: float) -> str:
@@ -267,21 +316,6 @@ def ivf_params(n: int) -> tuple[int, int]:
     return kc, max(1, kc // 4)
 
 
-def _cos_rows(m: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """(rows x centroids) cosine with the fold-exact op order (bit-matches
-    the SQL twin: dot fold / (sqrt(norm fold) * sqrt(norm fold)))."""
-    return _seq_dot(m, c) / (
-        np.sqrt(_seq_norm2(m))[:, None] * np.sqrt(_seq_norm2(c))[None, :]
-    )
-
-
-def _stable_topn(cos_row: np.ndarray, cids: np.ndarray, n: int) -> np.ndarray:
-    """Top-n centroid ids by (cosine DESC, cid ASC) — np.lexsort is stable
-    and keyed, unlike bare argsort(-sims) whose tie order is unspecified."""
-    order = np.lexsort((cids, -cos_row))
-    return cids[order[:n]]
-
-
 def _topn_cid_udf(bc, n: int):
     """pandas UDF embedding → array<int> of the top-n centroid ids under
     the fold-exact cosine with (cos DESC, cid ASC) ties. ``bc`` is a
@@ -294,14 +328,8 @@ def _topn_cid_udf(bc, n: int):
     def _probes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         centroids, cids = bc.value
         for emb in it:
-            m = np.stack(emb.to_numpy()).astype(np.float64)
-            cos = _cos_rows(m, centroids)
-            yield pd.Series(
-                [
-                    _stable_topn(cos[i], cids, n).astype(np.int32)
-                    for i in range(len(m))
-                ]
-            )
+            cos = _cos_rows(np.stack(emb.to_numpy()).astype(np.float64), centroids)
+            yield pd.Series(list(cids[_topk_order(cos, cids, n)].astype(np.int32)))
 
     return _probes
 
@@ -310,15 +338,6 @@ def _topn_cid_udf(bc, n: int):
 # A broadcast belongs to one SparkContext; keying by applicationId makes a
 # restarted session re-broadcast instead of reusing a dead handle.
 _IVF_BC: dict[tuple[str, str], "object"] = {}
-
-
-def _centroid_broadcast(spark: SparkSession, key: str, cmat: np.ndarray,
-                        cids: np.ndarray):
-    sc = spark.sparkContext
-    bc_key = (key, sc.applicationId)
-    if bc_key not in _IVF_BC:
-        _IVF_BC[bc_key] = sc.broadcast((cmat, cids))
-    return _IVF_BC[bc_key]
 
 
 def ann_ivf_topk_sql(
@@ -360,7 +379,7 @@ def ann_ivf_topk_sql(
         ),
         # the bounded training sample (smallest-cap mix-hash rows) — a no-op
         # below the cap, replayed so the twin matches kmeans_centroids'
-        # sample_cap at any corpus size
+        # IVF_SAMPLE_CAP at any corpus size
         (
             "samp AS (SELECT vec_id, e, eint FROM ev "
             f"ORDER BY {_mix_sql('vec_id')}, vec_id LIMIT {IVF_SAMPLE_CAP})"
@@ -495,66 +514,6 @@ def _srp_buckets_udf():
     return _buckets
 
 
-def _block_scored_pairs(
-    qdf: DataFrame, ndf: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Cogrouped vectorized candidate scoring shared by the bucketed ANN
-    families: for each bucket key, the (queries x members) cosine block is
-    ONE numpy matrix op with the fold-exact sequence, and each embedding
-    crosses the Arrow boundary once per bucket instead of once per pair
-    (a per-pair expression — HOF fold or unrolled — evaluates the 64-dim
-    fold millions of times and falls out of efficient codegen; measured
-    4-9x slower at the 10x scale point).
-
-    The cogroup key is a COARSE hash of the bucket key (a few chunks per
-    core), with the exact per-bucket blocks formed by a pandas groupby
-    inside the chunk: cogrouping directly on the bucket key spawns one
-    Arrow/pandas round-trip per bucket, and with thousands of near-empty
-    buckets that per-group overhead dominated (measured 2x at sf0.1 for
-    the SRP family). qdf: (key_cols..., query_id, qe); ndf: (key_cols...,
-    neighbor_id, ne) → (query_id, neighbor_id, cosine) with self-pairs
-    dropped; callers dedup collisions across buckets (the duplicates
-    carry bit-identical cosines)."""
-    schema = "query_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
-    coarse = qdf.sparkSession.sparkContext.defaultParallelism * 4
-    g = f"pmod(xxhash64({', '.join(key_cols)}), {coarse}) AS _g"
-    qg, ng = qdf.selectExpr("*", g), ndf.selectExpr("*", g)
-    empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
-
-    def block(qpdf, cpdf):
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        qm = np.stack(qpdf["qe"].to_numpy()).astype(np.float64)
-        nids = cpdf["neighbor_id"].to_numpy(dtype=np.int64)
-        nm = np.stack(cpdf["ne"].to_numpy()).astype(np.float64)
-        cos = _seq_dot(qm, nm) / (
-            np.sqrt(_seq_norm2(qm))[:, None] * np.sqrt(_seq_norm2(nm))[None, :]
-        )
-        qq = np.repeat(qids, len(nids))
-        nn = np.tile(nids, len(qids))
-        mask = qq != nn
-        return pd.DataFrame(
-            {"query_id": qq[mask], "neighbor_id": nn[mask],
-             "cosine": cos.ravel()[mask]}
-        )
-
-    def score(key, qpdf, cpdf):
-        if qpdf.empty or cpdf.empty:
-            return empty
-        nsubs = dict(iter(cpdf.groupby(key_cols, sort=False)))
-        out = []
-        for kk, qsub in qpdf.groupby(key_cols, sort=False):
-            csub = nsubs.get(kk)
-            if csub is not None:
-                out.append(block(qsub, csub))
-        return pd.concat(out, ignore_index=True) if out else empty
-
-    return (
-        qg.groupBy("_g")
-        .cogroup(ng.groupBy("_g"))
-        .applyInPandas(score, schema)
-    )
-
-
 def ann_srp_topk(
     spark: SparkSession, sf_dir: str, k: int, query_mod: int
 ) -> DataFrame:
@@ -571,30 +530,15 @@ def ann_srp_topk(
         "vec_id", "embedding",
         F.posexplode(srp(F.col("embedding"))).alias("band", "bucket"),
     )
-    qs = bk.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        "band", "bucket",
+    qs = bk.where(f"pmod(vec_id, {query_mod}) = 0").selectExpr(
+        "band", "bucket", "vec_id AS query_id", "embedding AS qe"
     )
-    ns = bk.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        "band", "bucket",
-    )
-    scored = _block_scored_pairs(
-        qs.select("band", "bucket", "query_id", "qe"),
-        ns.select("band", "bucket", "neighbor_id", "ne"),
-        ["band", "bucket"],
-    ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine",
-                F.col("rank").cast("long").alias("rank"))
-    )
+    ns = bk.selectExpr("band", "bucket", "vec_id AS neighbor_id", "embedding AS ne")
+    # the top-k is pushed into each bucket block (exact: a pair occurs at
+    # most once per bucket); a pair colliding in several bands carries
+    # bit-identical cosines, so the scalar rows dedup after scoring
+    scored = score_blocks(qs, ns, ["band", "bucket"], _topk_emit(k)).distinct()
+    return _rank_topk(scored, k)
 
 
 def ann_srp_topk_sql(k: int, query_mod: int) -> str:
@@ -663,8 +607,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
 
 
 def kmeans_centroids(
-    e: DataFrame, n_centroids: int, iters: int = IVF_ITERS,
-    sample_cap: int = IVF_SAMPLE_CAP,
+    e: DataFrame, n_centroids: int, iters: int = IVF_ITERS
 ) -> tuple[np.ndarray, np.ndarray]:
     """Distributed Lloyd iterations with a deterministic mix-hash seed —
     (centroid matrix, cid array), bit-identical to the SQL twin's replay.
@@ -672,7 +615,7 @@ def kmeans_centroids(
     Seeding: the n_centroids vectors with the smallest LCG mix-hash of
     vec_id (a deterministic uniform sample; at 10^12 scale the k-means||
     oversample-then-reduce pass slots in here with the same hash tape).
-    Training corpus: the smallest-``sample_cap`` rows of the SAME hash
+    Training corpus: the smallest-IVF_SAMPLE_CAP rows of the SAME hash
     order (one distributed top-k; a no-op below the cap) — so training
     never scans more than the cap no matter the corpus size.
     Update exactness: per-dimension sums run over ROUND(v * 2^20) integers
@@ -691,7 +634,7 @@ def kmeans_centroids(
     # ONE distributed top-k over the corpus, checkpointed: every Lloyd
     # iteration re-reads the materialized sample (≤ cap rows) instead of
     # re-running the top-k; blocks freed before returning
-    train = hashed.orderBy("h", "vec_id").limit(sample_cap).localCheckpoint(
+    train = hashed.orderBy("h", "vec_id").limit(IVF_SAMPLE_CAP).localCheckpoint(
         eager=True
     )
     seeds = train.limit(n_centroids).collect()
@@ -787,29 +730,26 @@ def _corpus_fingerprint(path: str) -> str:
     return f"{acc:08x}"
 
 
-def _ivf_index_key(sf_dir: str, n: int, n_centroids: int, iters: int) -> str:
-    """The snapshot-index key — corpus identity INCLUDING the content
-    fingerprint. Every holder of the centroid matrix (the _IVF_MEMO, the
-    SnapshotStore table, and BOTH _centroid_broadcast call sites) must key
-    off this same string: a broadcast keyed on anything weaker (e.g. just
-    sf_dir + kc) would keep serving stale centroids after the corpus is
-    regenerated in place, while ivf_index/ivf_postings had already moved
-    to fresh ones — breaking oracle parity."""
+def _ivf_index_key(sf_dir: str, n: int, n_centroids: int, spill: int | None = None) -> str:
+    """The snapshot key of the centroid index, or with ``spill`` of its
+    postings — corpus identity INCLUDING the content fingerprint. The
+    _IVF_MEMO, the centroid broadcast and both SnapshotStore tables key off
+    it: a key weaker than the fingerprint (e.g. just sf_dir + kc) would
+    keep serving stale centroids after the corpus is regenerated in place,
+    breaking oracle parity."""
     import os
 
-    corpus_path = f"{sf_dir}/embeddings.parquet"
+    kind, s = ("ivf", "") if spill is None else ("ivfpost", f"_s{spill}")
     return (
-        f"ivf_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_n{n}_k{n_centroids}_i{iters}_c{IVF_SAMPLE_CAP}"
-        f"_fp{_corpus_fingerprint(corpus_path)}"
+        f"{kind}_{os.path.basename(os.path.normpath(sf_dir))}"
+        f"_n{n}_k{n_centroids}_i{IVF_ITERS}{s}_c{IVF_SAMPLE_CAP}"
+        f"_fp{_corpus_fingerprint(f'{sf_dir}/embeddings.parquet')}"
     )
 
 
-def ivf_index(
-    spark: SparkSession, sf_dir: str, iters: int = IVF_ITERS,
-) -> tuple[np.ndarray, np.ndarray, int, int]:
-    """Build-once / probe-many IVF centroid index → (cmat, cids,
-    n_centroids, nprobe).
+def ivf_index(spark: SparkSession, sf_dir: str) -> tuple[object, int, int, int]:
+    """Build-once / probe-many IVF centroid index → (broadcast of (cmat,
+    cids), n, n_centroids, nprobe).
 
     The trained centroids are committed to a SnapshotStore table keyed by
     (corpus basename, row count, params) — the first call trains
@@ -819,26 +759,25 @@ def ivf_index(
     has: training is an index-BUILD cost, not a per-query cost. Parquet
     doubles round-trip bit-exactly, so a loaded index scores identically
     to a freshly trained one (the DuckDB twin replays training inline and
-    still matches)."""
-    import os
-
+    still matches). The broadcast is one per index per app, shared by the
+    postings build and the query probes."""
     from raster_processor_spark.sources.tables import parquet_row_count
     from raster_processor_spark.sources.snapshots import SnapshotStore
 
     corpus_path = f"{sf_dir}/embeddings.parquet"
     n = parquet_row_count(corpus_path)
     n_centroids, nprobe = ivf_params(n)
-    key = _ivf_index_key(sf_dir, n, n_centroids, iters)
+    key = _ivf_index_key(sf_dir, n, n_centroids)
     if key not in _IVF_MEMO:
         store = SnapshotStore(_default_index_root())
         # mutable on purpose: compute() fills in the ACTUAL post-dropout
         # centroid count and probe fraction before the manifest is written
         # (resume_or_compute commits after compute() returns)
-        metrics = {"n": n, "n_centroids": n_centroids, "iters": iters}
+        metrics = {"n": n, "n_centroids": n_centroids, "iters": IVF_ITERS}
 
         def compute() -> DataFrame:
             e = _read_parquet(spark, corpus_path)
-            cmat, cids = kmeans_centroids(e, n_centroids, iters)
+            cmat, cids = kmeans_centroids(e, n_centroids)
             metrics["actual_centroids"] = int(len(cids))
             metrics["probe_fraction"] = round(
                 min(max(1, n_centroids // 4), len(cids)) / len(cids), 4
@@ -858,110 +797,79 @@ def ivf_index(
             np.array([r.cid for r in rows], dtype=np.int64),
         )
     cmat, cids = _IVF_MEMO[key]
+    sc = spark.sparkContext
+    bc_key = (key, sc.applicationId)
+    if bc_key not in _IVF_BC:
+        _IVF_BC[bc_key] = sc.broadcast((cmat, cids))
     # nprobe is derived from the NOMINAL kc; empty-cluster dropout can leave
     # fewer actual centroids. Clamp so the advertised probe fraction can
     # never silently exceed 1.0 of the real index.
-    nprobe = min(nprobe, len(cids))
-    return cmat, cids, n_centroids, nprobe
+    return _IVF_BC[bc_key], n, n_centroids, min(nprobe, len(cids))
 
 
-def ivf_postings(
-    spark: SparkSession, sf_dir: str, spill: int = IVF_SPILL,
-    iters: int = IVF_ITERS,
-) -> DataFrame:
+def ivf_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF postings list — every corpus vector indexed under its top
-    ``spill`` clusters — committed once per (corpus, params) to the
+    IVF_SPILL clusters — committed once per (corpus, params) to the
     SnapshotStore and re-read by every query thereafter. This is the other
     half of the build-once index: at corpus scale the postings table IS the
     ANN index (spill×n rows, hive-partitionable by cluster), and queries
     must only probe it, never re-derive it. Parquet round-trips the float
     embeddings bit-exactly, so probing the stored postings scores
     identically to a freshly assigned corpus."""
-    import os
-
-    from raster_processor_spark.sources.tables import parquet_row_count
     from raster_processor_spark.sources.snapshots import SnapshotStore
 
-    cmat, cids, n_centroids, _ = ivf_index(spark, sf_dir, iters)
-    corpus_path = f"{sf_dir}/embeddings.parquet"
-    n = parquet_row_count(corpus_path)
-    key = (
-        f"ivfpost_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_n{n}_k{n_centroids}_i{iters}_s{spill}_c{IVF_SAMPLE_CAP}"
-        f"_fp{_corpus_fingerprint(corpus_path)}"
-    )
+    bc, n, n_centroids, _ = ivf_index(spark, sf_dir)
+    key = _ivf_index_key(sf_dir, n, n_centroids, IVF_SPILL)
     store = SnapshotStore(_default_index_root())
-    bc = _centroid_broadcast(spark, key, cmat, cids)
 
     def compute() -> DataFrame:
-        e = _read_parquet(spark, corpus_path)
+        e = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
         return e.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("ne"),
             F.explode(
-                _topn_cid_udf(bc, spill)(F.col("embedding"))
+                _topn_cid_udf(bc, IVF_SPILL)(F.col("embedding"))
             ).alias("cluster"),
         )
 
     return store.resume_or_compute(
         spark, key, compute,
         lineage_cols={"cell": "cluster"},
-        metrics={"n": n, "spill": spill},
+        metrics={"n": n, "spill": IVF_SPILL},
     )
 
 
 def ann_ivf_topk(
-    spark: SparkSession, sf_dir: str, k: int, query_mod: int,
-    spill: int = IVF_SPILL,
+    spark: SparkSession, sf_dir: str, k: int, query_mod: int
 ) -> DataFrame:
     """IVF ANN, production-shaped: corpus-size-scaled centroid count
     (ivf_params: 4*sqrt(n) centroids, nprobe = centroids/4), k-means-trained
     centroids loaded from the build-once snapshot index (ivf_index — no
     training pass inside the query after the first build), and spilled
-    corpus assignment (each vector indexed under its top ``spill`` clusters)
-    so the fixed 25% probe fraction reaches recall >= 0.9 even on a
-    structureless corpus. Deterministic end-to-end — the SQL twin replays
+    corpus assignment (each vector indexed under its top IVF_SPILL
+    clusters) so the fixed 25% probe fraction reaches recall >= 0.9 even on
+    a structureless corpus. Deterministic end-to-end — the SQL twin replays
     seeding, Lloyd iterations, spill, probes, and scoring bit-exactly.
     Queries stay a distributed DataFrame throughout."""
-    from raster_processor_spark.sources.tables import parquet_row_count
-
     e = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    cmat, cids, n_centroids, nprobe = ivf_index(spark, sf_dir)
-    corpus = ivf_postings(spark, sf_dir, spill)
-    # keyed by the SAME fingerprinted index key ivf_index used, so an
-    # in-place corpus regeneration can never pair fresh postings with a
-    # stale memoized broadcast of the old centroids
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
-    bc = _centroid_broadcast(
-        spark, "q_" + _ivf_index_key(sf_dir, n, n_centroids, IVF_ITERS),
-        cmat, cids,
-    )
+    bc, _, _, nprobe = ivf_index(spark, sf_dir)
+    corpus = ivf_postings(spark, sf_dir)
     qs = e.where(f"pmod(vec_id, {query_mod}) = 0").selectExpr(
         "vec_id AS query_id", "embedding AS qe"
     )
     qp = qs.withColumn(
         "cluster", F.explode(_topn_cid_udf(bc, nprobe)("qe"))
     )
-    # Scoring is COGROUPED BY CLUSTER and vectorized (_block_scored_pairs,
-    # shared with the SRP family; measured 28 s -> ~3 s vs per-pair
-    # expression scoring at the 20k-vector scale point). At larger scale a
-    # hot cluster's cogroup task is bounded by salting the cluster key on
-    # both sides. spill means a (query, neighbor) pair can collide in
-    # several probed clusters — the duplicates carry bit-identical cosines
-    # (same two vectors, same op order in every group), so dedup the
-    # SCALAR rows after scoring.
-    scored = _block_scored_pairs(
-        qp.selectExpr("cluster", "query_id", "qe"),
-        corpus.selectExpr("cluster", "neighbor_id", "ne"),
-        ["cluster"],
+    # Scoring is blocked by cluster (score_blocks; measured 28 s -> ~3 s vs
+    # per-pair expression scoring at the 20k-vector scale point), with the
+    # top-k pushed into each block: a pair occurs at most once per cluster.
+    # At larger scale a hot cluster's cogroup task is bounded by salting the
+    # cluster key on both sides. Spill means a (query, neighbor) pair can
+    # collide in several probed clusters — the duplicates carry
+    # bit-identical cosines (same two vectors, same op order in every
+    # block), so dedup the SCALAR rows after scoring.
+    scored = score_blocks(
+        qp, corpus.selectExpr("cluster", "neighbor_id", "ne"), ["cluster"],
+        _topk_emit(k),
     ).distinct()
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
-        )
-        .where(f"rank <= {k}")
-        .selectExpr("query_id", "neighbor_id", "cosine",
-                    "CAST(rank AS BIGINT) AS rank")
-    )
+    return _rank_topk(scored, k)

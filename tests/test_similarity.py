@@ -1,9 +1,13 @@
 """ANN quality checks: IVF recall against the exact brute-force baseline,
-and scale-shape assertions (no crossJoin / no corpus-sized driver pulls in
-the near-dup plan).
+scale-shape assertions (no crossJoin / no corpus-sized driver pulls in
+the near-dup plan), and twin parity of the embedding builders on edge
+inputs.
 """
 
 from __future__ import annotations
+
+import numpy as np
+import pytest
 
 from raster_processor_spark.operators import similarity as sim
 from tests.conftest import SF_ORACLE
@@ -155,14 +159,86 @@ def test_near_dup_plan_has_no_cross_join(spark):
     plan = sim.embedding_near_dup_pairs(spark, SF_ORACLE, 0.45)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "CartesianProduct" not in plan
-    # the only nested-loop is the broadcast of the B(B+1)/2 work-unit dim
-    assert "FlatMapGroupsInPandas" in plan or "applyInPandas" in plan.lower()
+    # the block pairs come from exploding each vector's own block id: one
+    # cogroup, no join at all (no broadcast of a work-unit table)
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert "NestedLoopJoin" not in plan
 
 
 def test_brute_topk_plan_has_no_cartesian(spark):
     plan = sim.ann_brute_topk(spark, SF_ORACLE, 10, 25)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "CartesianProduct" not in plan
+
+
+# Each embedding builder and its DuckDB twin on (spark, sf_dir, case) /
+# (case): the four queries that share score_blocks.
+_EMBEDDING_BUILDERS = {
+    "ann_cosine_topk": (
+        lambda spark, d, c: sim.ann_brute_topk(spark, d, c["k"], c["query_mod"]),
+        lambda c: sim.ann_brute_topk_sql(c["k"], c["query_mod"]),
+    ),
+    "ann_ivf_topk": (
+        lambda spark, d, c: sim.ann_ivf_topk(spark, d, c["k"], c["query_mod"]),
+        lambda c: sim.ann_ivf_topk_sql(c["k"], c["query_mod"]),
+    ),
+    "ann_srp_topk": (
+        lambda spark, d, c: sim.ann_srp_topk(spark, d, c["k"], c["query_mod"]),
+        lambda c: sim.ann_srp_topk_sql(c["k"], c["query_mod"]),
+    ),
+    "dedup_embedding_cosine": (
+        lambda spark, d, c: sim.embedding_near_dup_pairs(spark, d, c["tau"]),
+        lambda c: sim.embedding_near_dup_sql(c["tau"]),
+    ),
+}
+_EDGE_CASES = {
+    # k above the corpus size: every block emits all it has
+    "k_over_n": {"ids": range(1, 8), "k": 50, "query_mod": 1, "tau": 0.0},
+    # no id is a multiple of query_mod: the query side of every block is empty
+    "empty_query_set": {"ids": range(1, 9), "k": 5, "query_mod": 1000, "tau": 0.0},
+    # a cosine never reaches 2: no pair qualifies
+    "tau_above_one": {"ids": range(1, 8), "k": 5, "query_mod": 2, "tau": 2.0},
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_CASES))
+@pytest.mark.parametrize("builder", sorted(_EMBEDDING_BUILDERS))
+def test_embedding_builders_match_twin_on_edge_inputs(
+    spark, tmp_path, monkeypatch, builder, case
+):
+    """Tiny corpora that leave blocks short of k, without queries, or
+    without a qualifying pair: each builder still equals its DuckDB twin
+    row for row (the cosines bit-exactly)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index"))
+    c = _EDGE_CASES[case]
+    ids = list(c["ids"])
+    # three base directions plus small noise: near neighbours share SRP
+    # buckets, so the LSH family has candidates to score
+    rng = np.random.default_rng(len(ids))
+    base = rng.uniform(-1, 1, (3, sim.DIM))
+    vecs = base[np.arange(len(ids)) % 3] + rng.uniform(-0.05, 0.05, (len(ids), sim.DIM))
+    sf_dir = str(tmp_path / "sf")
+    (tmp_path / "sf").mkdir()
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array(list(vecs.astype(np.float32)), pa.list_(pa.float32())),
+        }),
+        f"{sf_dir}/embeddings.parquet",
+    )
+    build, twin = _EMBEDDING_BUILDERS[builder]
+    got = sorted(map(tuple, build(spark, sf_dir, c).collect()))
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+    want = sorted(con.sql(twin(c)).fetchall())
+    con.close()
+    assert got == want
+    if case == "k_over_n":
+        assert len(got) > 0
 
 
 def test_image_phash_pairs_recover_planted_variants(spark):
